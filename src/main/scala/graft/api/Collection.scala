@@ -18,7 +18,8 @@ import graft.spark.HadroTable
   *
   * Keyed semantics are last-write-wins over the append-only log: `set`
   * appends new versions, `delete` appends tombstones, and reads resolve the
-  * latest record per key via a window over the `_hadro_seq` metadata column.
+  * latest record per key via a window over the `_hadro_seq` metadata column
+  * (point reads apply the same rule on the driver, see [[get]]).
   * Pure-append collections (no set/delete ever committed) skip resolution
   * entirely — the manifest tracks a `mutated` bit — so plain scans stay
   * shuffle-free at any scale.
@@ -197,18 +198,28 @@ final class Collection private (spark: SparkSession, val path: String) {
   }
 
   def delete(values: Any*): Unit = {
-    val k = keyField.get
+    val k = requireKeyed("delete()")
     val kt = CollectionMeta.readSchema(dir).get.schema(k).dataType
     val df = values.map(_.toString).toDF(k).select(col(k).cast(kt).as(k))
     delete(df)
   }
 
-  /** Point lookup by key (#10). Segment skipping via manifest min/max stats
-    * makes this touch only segments whose key range covers the value. */
+  private def requireKeyed(op: String): String = keyField.getOrElse(
+    throw new IllegalArgumentException(s"$op requires a keyed collection"))
+
+  /** Point lookup by key (#10), the Bitcask read. The key→offset index
+    * plans one single-record read per stored version of the key, and the
+    * driver reads those records itself, resolves last-write-wins and
+    * returns a local frame: collecting, counting or probing it runs no
+    * Spark job ([[graft.spark.HadroPointRead]]). The lazy resolved-view
+    * plan `toDF().filter(key === value)` is the fallback when some live
+    * segment has no offset index (`hadro.offsetIndex=false`), when the
+    * scan reports bucket/identity partitioning, or when the value does not
+    * convert exactly to the key type (Int widens to Long). Either way the
+    * result reflects every write committed before the call. */
   def get(value: Any): DataFrame = {
-    val k = keyField.getOrElse(throw new IllegalArgumentException(
-      "get() requires a keyed collection"))
-    toDF().filter(col(k) === lit(value))
+    val k = requireKeyed("get()")
+    pointRead(k, Seq(value)).getOrElse(toDF().filter(col(k) === lit(value)))
   }
 
   /** Point lookup with a default — the legacy behavioral contract
@@ -217,12 +228,19 @@ final class Collection private (spark: SparkSession, val path: String) {
   def get(value: Any, default: org.apache.spark.sql.Row): org.apache.spark.sql.Row =
     get(value).collect().headOption.getOrElse(default)
 
+  /** Multi-key lookup (`hadro[id, id...]`): the [[get]] point path for up
+    * to [[Collection.MaxKeyPushdown]] distinct keys, with the same
+    * fallbacks (plus: more keys than that) to the lazy
+    * `toDF().filter(key IN values)` plan. Null keys match nothing. */
   def multiGet(values: Any*): DataFrame = {
-    val k = keyField.get
-    toDF().filter(col(k).isin(values: _*))
+    val k = requireKeyed("multiGet()")
+    pointRead(k, values).getOrElse(toDF().filter(col(k).isin(values: _*)))
   }
 
-  /** Containment probe (#14). */
+  private def pointRead(k: String, values: Seq[Any]): Option[DataFrame] =
+    graft.spark.HadroPointRead.read(spark, dir, k, values, Collection.MaxKeyPushdown)
+
+  /** Containment probe (#14): a [[get]], so a point read when it applies. */
   def contains(value: Any): Boolean = !get(value).isEmpty
 
   /** Key enumeration (#15). */

@@ -352,7 +352,12 @@ object SegmentWriter {
 final class SegmentReader(path: Path, startOffset: Long = 0L, endOffset: Long = -1L)
     extends Iterator[(Int, Array[Byte])] with AutoCloseable {
   private val in = new FileInputStream(path.toFile)
-  private var buf = new Array[Byte](SegmentReader.BlockSize)
+  // a bounded range is never buffered past its own end up front: a
+  // single-record point range [offset, offset + 1) reads that one record,
+  // not a block (ensure() grows the buffer to the record's size)
+  private var buf = new Array[Byte](
+    if (endOffset < 0) SegmentReader.BlockSize
+    else math.min(SegmentReader.BlockSize.toLong, math.max(endOffset - startOffset, 0L)).toInt)
   private var limit = 0 // valid bytes in buf
   private var pos = 0 // parse cursor
   private var eof = false

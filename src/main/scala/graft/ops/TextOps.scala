@@ -113,7 +113,15 @@ object TextOps {
     * summed through DECIMAL(27,12), so the score is bit-identical across
     * partitionings and engines (FP `sum(double)` would drift with
     * partial-aggregation order, and ln() can differ in the last ulp
-    * between libms). */
+    * between libms).
+    *
+    * Collision contract: tokens are keyed by their 64-bit `xxhash64`
+    * (Spark's seed 42), not by their strings. Two distinct tokens of the
+    * corpus with equal hashes are one vocabulary entry: their counts add
+    * and both score with the merged log-probability. Otherwise the scores
+    * equal the string-keyed definition exactly. For V distinct tokens the
+    * chance of any collision is at most V²/2^65 (about 3e-8 at V = 10^6);
+    * no collision is detected or reported. */
   def lmNllScores(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // token keys hashed to 8-byte longs before the vocabulary exchange
     // and the broadcast (the d09 discipline): the model relation carries
@@ -146,7 +154,16 @@ object TextOps {
     * and aggregation order. Model and scores are two hash aggregations +
     * one broadcast-or-shuffle join on the bigram key — no all-pairs, no
     * driver collections beyond the vocab size V. Docs with fewer than two
-    * tokens carry no bigram and emit no row. */
+    * tokens carry no bigram and emit no row.
+    *
+    * Collision contract: tokens and bigrams are keyed by their 64-bit
+    * `xxhash64` (Spark's seed 42), not by their strings. Two distinct keys
+    * of the corpus with equal hashes are counted as one: bigram counts,
+    * leading-token counts and V merge, and every document holding either
+    * key scores with the merged counts. Otherwise the scores equal the
+    * string-keyed definition exactly. For K distinct keys the chance of
+    * any collision is at most K²/2^65 (about 3e-8 at K = 10^6); no
+    * collision is detected or reported. */
   def lmBigramNllScores(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -197,7 +214,16 @@ object TextOps {
     * tokens and vocabulary, never pairs, so the plan survives any corpus
     * size. Scores round to 4 decimals BEFORE ranking so ranks (and the
     * DuckDB twin) are deterministic; ties break to the lexicographically
-    * smaller term. Returns (doc_id, rk, term, score). */
+    * smaller term. Returns (doc_id, rk, term, score).
+    *
+    * Collision contract: document frequencies are keyed by each term's
+    * 64-bit `xxhash64` (Spark's seed 42); the returned `term` is always the
+    * document's own string. Two distinct terms with equal hashes share one
+    * document frequency (the sum of both), so both score as if equally
+    * common. Otherwise the scores equal the string-keyed definition
+    * exactly. For V distinct terms the chance of any collision is at most
+    * V²/2^65 (about 3e-8 at V = 10^6); no collision is detected or
+    * reported. */
   def bm25TopTerms(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"),

@@ -102,8 +102,8 @@ object StorageQueries {
         WHERE c_custkey % 5 <> 0 ORDER BY c_custkey""")),
 
     // ---------------------------------------------------------------- h06
-    // Point lookup by key (§2.2 #10): get() over a keyed collection;
-    // manifest stats restrict the scan to one segment.
+    // Point lookup by key (§2.2 #10): get() over a keyed collection; the
+    // key→offset index plans one single-record read, done on the driver.
     QueryDef(
       "h06_point_get",
       (s, dir) => {

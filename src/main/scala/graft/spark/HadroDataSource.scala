@@ -1035,7 +1035,7 @@ final class HadroScan(path: Path, dataSchema: StructType, required: StructType,
     * by construction. Time travel: a snapshot is just an older manifest —
     * segment files are immutable and appends never rewrite them, so any
     * retained version reconstructs its exact state. */
-  private lazy val manifestSnapshot: Manifest = versionAsOf
+  private[spark] lazy val manifestSnapshot: Manifest = versionAsOf
     .map(v => CollectionMeta.manifestAt(path, v))
     .getOrElse(CollectionMeta.currentManifest(path))
 
@@ -1321,8 +1321,11 @@ final class HadroScan(path: Path, dataSchema: StructType, required: StructType,
     val identityKeyed =
       if (bucketed.isDefined) None else identityStatic
     val reporting = bucketed.isDefined || identityKeyed.isDefined
+    // with no runtime filter the effective filters ARE the pushed ones,
+    // so the memoized static plan is the answer (no second stats/bloom
+    // pass over every live segment)
     val (manifest, planned) =
-      if (reporting) (manifestStatic, plannedStatic)
+      if (reporting || runtimeFilters.isEmpty) (manifestStatic, plannedStatic)
       else plannedSegments(effectiveFilters)
     val filters = effectiveFilters
     // Operability at scale: a 100 TB scan's health is "how much did

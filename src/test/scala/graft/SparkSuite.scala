@@ -21,6 +21,33 @@ trait SparkSuite extends AnyFunSuite {
         graft.meta.FileIO.impl = impl
         try body(tag) finally graft.meta.FileIO.impl = prev
     }
+
+  /** Runs `body` and counts the Spark jobs it started. Listener events
+    * arrive asynchronously but in order, so a marked sentinel job run
+    * after `body` bounds the count: once its start event is seen, every
+    * job `body` started has been counted. */
+  protected def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val marker = s"count-jobs-sentinel-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          sentinelSeen.countDown()
+        else if (sentinelSeen.getCount > 0) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel job start never delivered")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSuite {

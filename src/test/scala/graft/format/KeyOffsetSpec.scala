@@ -1,20 +1,49 @@
 package graft.format
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, In}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSuite
 import graft.api.Collection
 import graft.meta.CollectionMeta
+import graft.spark.{HadroInputPartition, HadroScanBuilder, HadroTable, PointBatchPartition}
 
 /** Persisted key→offset index: point lookups plan single-record scan
-  * ranges — bytes read proportional to matches, not to segments. */
+  * ranges — bytes read proportional to matches, not to segments — and
+  * `get`/`multiGet` read them on the driver, with no Spark job. */
 class KeyOffsetSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
     Files.createTempDirectory(s"koff_$name").resolve("c").toString
+
+  /** (records planned, records read) by a scan with `f` pushed: every
+    * planned partition must be a single-record range or a point batch. */
+  private def pointScan(path: String, f: Filter): (Int, Int) = {
+    val p = Paths.get(path)
+    val schema = HadroTable.reportedSchema(CollectionMeta.readSchema(p).get)
+    val b = new HadroTable(p, schema).newScanBuilder(
+      new CaseInsensitiveStringMap(java.util.Map.of("path", path)))
+      .asInstanceOf[HadroScanBuilder]
+    b.pushFilters(Array(f))
+    val batch = b.build().toBatch
+    val parts = batch.planInputPartitions()
+    val planned = parts.map {
+      case r: HadroInputPartition =>
+        assert(r.endOffset == r.startOffset + 1, s"not a single-record range: $r"); 1
+      case pb: PointBatchPartition => pb.points.size
+      case other => fail(s"not a point partition: $other")
+    }.sum
+    val factory = batch.createReaderFactory()
+    val read = parts.map { part =>
+      val r = factory.createReader(part)
+      try Iterator.continually(r.next()).takeWhile(identity).size finally r.close()
+    }.sum
+    (planned, read)
+  }
 
   test("index round-trips and over-returns only on equal hashes") {
     val entries = Seq((5L, 100L, 0L), (3L, 50L, 1L), (5L, 200L, 2L), (9L, 300L, 3L))
@@ -34,16 +63,17 @@ class KeyOffsetSpec extends SparkSuite {
     val m = CollectionMeta.currentManifest(java.nio.file.Paths.get(path))
     assert(m.segments.forall(_.offsetIndex.isDefined))
 
-    val q = c.get(42L)
-    assert(q.select($"c_custkey").as[Long].head() == 42L)
-    // one key version exists => exactly one single-record task
-    assert(q.rdd.getNumPartitions == 1,
-      s"expected 1 single-record task, got ${q.rdd.getNumPartitions}")
-
-    // multiGet: one task per matching record
-    val mg = c.multiGet(1L, 2L, 3L)
-    assert(mg.count() == 3)
-    assert(mg.rdd.getNumPartitions == 3)
+    // one key version exists => exactly one record planned and read;
+    // multiGet: exactly the three matching records
+    assert(pointScan(path, EqualTo("c_custkey", 42L)) == ((1, 1)))
+    assert(pointScan(path, In("c_custkey", Array[Any](1L, 2L, 3L))) == ((3, 3)))
+    // ...and the driver reads them itself: no Spark job
+    val ((got, n), jobs) = countJobs {
+      (c.get(42L).select($"c_custkey").as[Long].collect().toSeq,
+        c.multiGet(1L, 2L, 3L).collect().length)
+    }
+    assert(got == Seq(42L) && n == 3)
+    assert(jobs == 0, s"point reads started $jobs Spark jobs")
   }
 
   test("upserted keys read one record per version and resolve LWW") {
@@ -99,8 +129,9 @@ class KeyOffsetSpec extends SparkSuite {
     val c = Collection(spark, path)
     val full = spark.read.format("hadro").load(path)
     assert(full.rdd.getNumPartitions > 1) // split ranges for full scans
-    val q = c.get(5L)                     // but a point get plans ONE record
-    assert(q.rdd.getNumPartitions == 1)
-    assert(q.select($"p_partkey").as[Long].head() == 5L)
+    // but a point get plans and reads ONE record, with no Spark job
+    assert(pointScan(path, EqualTo("p_partkey", 5L)) == ((1, 1)))
+    val (got, jobs) = countJobs(c.get(5L).select($"p_partkey").as[Long].collect().toSeq)
+    assert(got == Seq(5L) && jobs == 0)
   }
 }

@@ -89,6 +89,27 @@ class RuntimeV2FilterSpec extends SparkSuite {
     } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
   }
 
+  test("a scan plans identical partitions with and without a runtime filter") {
+    // no runtime filter: the memoized static plan is reused; a runtime
+    // filter that prunes nothing re-plans to the very same partitions
+    val path = Files.createTempDirectory("rtv2same").resolve("c").toString
+    val src = spark.read.parquet(s"$sf0001/customer.parquet")
+      .repartitionByRange(8, $"c_custkey")
+    Collection.create(spark, path, src)
+    val schema = graft.meta.CollectionMeta.readSchema(Paths.get(path)).get.schema
+    val b = new HadroTable(Paths.get(path), schema).newScanBuilder(
+      new CaseInsensitiveStringMap(java.util.Map.of("path", path)))
+      .asInstanceOf[HadroScanBuilder]
+    b.pushFilters(Array(org.apache.spark.sql.sources.GreaterThan("c_custkey", 100L)))
+    val scan = b.build().asInstanceOf[HadroScan]
+    val static = scan.toBatch.planInputPartitions().toSeq
+    assert(static.nonEmpty && static.length < 8, s"static pruning kept ${static.length}")
+    assert(scan.toBatch.planInputPartitions().toSeq == static)
+    scan.filter(Array(new Predicate(">=", Array[V2Expression](
+      Expressions.column("c_custkey"), Expressions.literal(0L)))))
+    assert(scan.toBatch.planInputPartitions().toSeq == static)
+  }
+
   test("filterAttributes covers every stored column") {
     val path = Files.createTempDirectory("rtv2attr").resolve("c").toString
     Collection.create(spark, path, spark.read.parquet(s"$sf0001/region.parquet"))
