@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A [[ClusterOps.componentsUpdate]] window touched more distinct
   * clusters than `maxDriverRoots` — the driver-resident root collect is
@@ -37,6 +38,26 @@ object ClusterOps {
     * nightly windows (whose touched subgraphs are batch-proportional)
     * while a giant cluster touched by one pair stays cluster-side. */
   private val MaxDriverFoldMembers: Int = 1 << 16
+
+  /** The stored schemas of the collections the loop verbs create: the
+    * membership state, the materialized keep-list and the drop list.
+    * Declared once, so a collection's stored nullability never depends
+    * on which half computed its first frame (driver tuples are
+    * non-nullable, distributed aggregates and outer joins nullable).
+    * Keys are non-null; the keep-list's `keep_id`/`n_members` are
+    * nullable because its merges carry NULL tombstone rows. */
+  private val StateSchema =
+    StructType.fromDDL("doc_id BIGINT NOT NULL, cluster BIGINT NOT NULL")
+  private val KeepSchema = StructType.fromDDL(
+    "cluster BIGINT NOT NULL, keep_id BIGINT, n_members BIGINT")
+  private val DropSchema = StructType.fromDDL(
+    "doc_id BIGINT NOT NULL, cluster BIGINT NOT NULL, keep_id BIGINT NOT NULL")
+
+  /** `rows`' columns of `schema`, re-typed to its declared nullability
+    * (write a collection-creating frame through this). */
+  private def declared(rows: DataFrame, schema: StructType): DataFrame =
+    rows.sparkSession.createDataFrame(
+      rows.select(schema.fieldNames.toSeq.map(col): _*).rdd, schema)
 
   /** `pairs`: two long columns (first < second convention not required).
     * Returns (node, cluster) where cluster = min node id reachable. Nodes
@@ -234,7 +255,6 @@ object ClusterOps {
     * stored). Returns the number of state rows appended this window. */
   def componentsUpdate(spark: org.apache.spark.sql.SparkSession,
       newPairs: DataFrame, aCol: String, bCol: String, statePath: String,
-      maxIdPushdown: Int = graft.api.Collection.MaxKeyPushdown,
       maxDriverRoots: Int = DedupOps.DefaultMaxStateSplit,
       keepPath: Option[String] = None,
       maxStateFiles: Int = 64): Long =
@@ -244,6 +264,25 @@ object ClusterOps {
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
     val exists = graft.meta.CollectionMeta.collectionCommitted(p)
+    import spark.implicits._
+    // the maxDriverRoots CONTRACT, checked by both halves before any
+    // commit (the dedicated type keeps componentsCycle's rebuild
+    // delegation working)
+    def requireRootsBound(roots: Int): Unit =
+      if (roots > maxDriverRoots)
+        throw new TouchedRootsOverBoundException(
+          s"hadro: componentsUpdate window touches more than " +
+            s"$maxDriverRoots distinct clusters — the root collect is " +
+            "driver-resident and bounded by |batch docs| by contract; " +
+            "fold a backfill of this size in windows instead of one " +
+            "batch (or componentsRebuild for a full pair log), or " +
+            "raise maxDriverRoots if the driver is sized for it")
+    // One of two halves COMPUTES the window, picked by its size; the one
+    // tail below COMMITS it. A half returns the keep changeset (present
+    // iff keepPath is: the touched clusters' keep rows plus a
+    // `_keep_del` tombstone per merged-away root), the changed roots,
+    // the state rows to append and their count.
+    type Window = (Option[DataFrame], Seq[Long], DataFrame, Long)
     // BOUNDED DRIVER-SIDE FOLD (fast path): when the window's pair set
     // AND the touched clusters' member rows both fit the bounded-probe
     // discipline, the whole fold — components, changed roots, keep rows,
@@ -258,7 +297,7 @@ object ClusterOps {
     // edges. Member rows are fetched ONLY under an explicit bound
     // (head(n+1)); anything larger returns None and the distributed
     // fold — which never collects member lists at all — runs unchanged.
-    def driverFold(): Option[Long] = {
+    def driverFold(): Option[Window] = {
       val maxPairs = graft.api.Collection.MaxKeyPushdown
       val pairRows = pairsDf.head(maxPairs + 1)
       if (pairRows.length > maxPairs) return None
@@ -270,32 +309,17 @@ object ClusterOps {
         else {
           val coll = graft.api.Collection(spark, statePath)
           val state = coll.scanVersion(coll.version)
-          val touched = state.filter(
-            if (batchDocs.size <= maxIdPushdown)
-              col("doc_id").isin(batchDocs: _*)
-            else col("doc_id").isInCollection(batchDocs))
+          val touched = state.filter(col("doc_id").isin(batchDocs: _*))
             .select(col("cluster")).distinct()
             .head(batchDocs.size + 1) // distinct roots <= |batch docs|
           if (touched.length > batchDocs.size) return None // defensive
           val roots = touched.map(_.getLong(0)).toSeq
-          // the maxDriverRoots CONTRACT holds on this path too (and the
-          // dedicated type keeps componentsCycle's rebuild delegation
-          // working): the fast path's roots are batch-bounded by
-          // construction, but a caller-lowered bound must still refuse
-          if (roots.size > maxDriverRoots)
-            throw new TouchedRootsOverBoundException(
-              s"hadro: componentsUpdate window touches more than " +
-                s"$maxDriverRoots distinct clusters — the root collect is " +
-                "driver-resident and bounded by |batch docs| by contract; " +
-                "fold a backfill of this size in windows instead of one " +
-                "batch (or componentsRebuild for a full pair log), or " +
-                "raise maxDriverRoots if the driver is sized for it")
+          // the fast path's roots are batch-bounded by construction, but
+          // a caller-lowered bound must still refuse
+          requireRootsBound(roots.size)
           if (roots.isEmpty) Array.empty
           else {
-            val memb = state.filter(
-              if (roots.size <= maxIdPushdown)
-                col("cluster").isin(roots: _*)
-              else col("cluster").isInCollection(roots))
+            val memb = state.filter(col("cluster").isin(roots: _*))
               .select(col("doc_id"), col("cluster"))
               .head(MaxDriverFoldMembers + 1)
             if (memb.length > MaxDriverFoldMembers) return None
@@ -327,37 +351,13 @@ object ClusterOps {
       // a touched cluster re-roots atomically or not at all: changed =
       // old roots whose own new label moved (roots only decrease)
       val changedRoots = roots.filter(r => find(r) != r).toSeq.sorted
-      import spark.implicits._
-      keepPath.foreach { kp =>
+      val keepChanges = keepPath.map { _ =>
         val kept = labels.groupBy(_._2).iterator.map { case (c, ms) =>
-          (c, ms.iterator.map(_._1).min, ms.length.toLong)
-        }.toSeq.sorted
-        val keepExists = graft.meta.CollectionMeta.collectionCommitted(
-          java.nio.file.Paths.get(kp))
-        if (!keepExists && !exists)
-          // day 0 of the whole loop: the touched clusters ARE the state
-          kept.toDF("cluster", "keep_id", "n_members")
-            .write.format("hadro").mode("overwrite")
-            .option("hadro.key", "cluster").save(kp)
-        else {
-          // keepPath first supplied AFTER the state accumulated clusters:
-          // one-time corpus-proportional backfill (see the distributed
-          // fold below), then this window's touched rows apply as usual
-          if (!keepExists)
-            keepList(spark, statePath)
-              .write.format("hadro").mode("overwrite")
-              .option("hadro.key", "cluster").save(kp)
-          val keep = graft.api.Collection(spark, kp)
-          // ONE atomic commit for the whole window's keep maintenance
-          // (tombstones for merged-away roots + touched upserts)
-          val changes = (kept.map { case (c, k, n) =>
-            (c, Option(k), Option(n), false)
-          } ++ changedRoots.map(c =>
-            (c, Option.empty[Long], Option.empty[Long], true)))
-            .toDF("cluster", "keep_id", "n_members", "_keep_del")
-          if (changedRoots.nonEmpty || kept.nonEmpty)
-            keep.merge(changes, col("_keep_del"))
-        }
+          (c, Option(ms.iterator.map(_._1).min), Option(ms.length.toLong),
+            false)
+        }.toSeq.sortBy(_._1)
+        (kept ++ changedRoots.map(c => (c, None, None, true)))
+          .toDF("cluster", "keep_id", "n_members", "_keep_del")
       }
       // rows that stand: members of UNchanged clusters — everything else
       // (fresh docs, re-rooted members) appends
@@ -365,80 +365,80 @@ object ClusterOps {
       val unchangedDocs = oldRows.iterator
         .filter(r => !changedSet.contains(r._2)).map(_._1).toSet
       val toAppend = labels.filter(l => !unchangedDocs.contains(l._1))
-      val appended = toAppend.length.toLong
-      if (appended > 0)
-        toAppend.toSeq.toDF("doc_id", "cluster")
-          .write.format("hadro")
-          .mode(if (exists) "append" else "overwrite")
-          .option("hadro.key", "doc_id").save(statePath)
-      if (changedRoots.nonEmpty) {
-        val cond =
-          if (changedRoots.size <= maxIdPushdown)
-            col("cluster").isin(changedRoots: _*)
-          else col("cluster").isInCollection(changedRoots)
-        graft.spark.HadroDeleteSupport.dvDeleteWhere(p, cond)
-      }
-      if (exists || appended > 0) {
-        DedupOps.maybeCompactIndex(
-          graft.api.Collection(spark, statePath), maxStateFiles)
-        keepPath.foreach(kp => DedupOps.maybeCompactIndex(
-          graft.api.Collection(spark, kp), maxStateFiles))
-      }
-      Some(appended)
+      Some((keepChanges, changedRoots,
+        toAppend.toSeq.toDF("doc_id", "cluster"), toAppend.length.toLong))
     }
-    driverFold().getOrElse {
-    val pairs = pairsDf.localCheckpoint()
-    val batchDocs = pairs.select(col("a").as("doc_id"))
-      .unionByName(pairs.select(col("b").as("doc_id"))).distinct()
-    // current rows of every touched cluster (pinned version)
-    val old: DataFrame =
-      if (!exists) pairs.select(col("a").as("doc_id"), col("a").as("cluster")).limit(0)
-      else {
-        val coll = graft.api.Collection(spark, statePath)
-        val state = coll.scanVersion(coll.version)
-        // over-bound batches take a PLAIN semi-join, never a forced
-        // broadcast: a corpus-sized batch (the full-log fold
-        // componentsCycle attempts before delegating to the rebuild)
-        // would OOM the driver inside an explicit broadcast() BEFORE
-        // the roots bound below could fire — AQE still auto-broadcasts
-        // genuinely small over-1000-doc batches from runtime stats
-        val touched0 = graft.api.Collection
-          .boundedKeyLits(batchDocs, maxIdPushdown)
-          .fold(state.join(batchDocs, Seq("doc_id"), "left_semi"))(
-            vs => state.filter(col("doc_id").isin(vs: _*)))
-        val rootRows = touched0.select(col("cluster")).distinct()
-          .head(maxDriverRoots + 1) // bounded: <= |batch docs| by contract
-        if (rootRows.length > maxDriverRoots)
-          throw new TouchedRootsOverBoundException(
-            s"hadro: componentsUpdate window touches more than " +
-              s"$maxDriverRoots distinct clusters — the root collect is " +
-              "driver-resident and bounded by |batch docs| by contract; " +
-              "fold a backfill of this size in windows instead of one " +
-              "batch (or componentsRebuild for a full pair log), or " +
-              "raise maxDriverRoots if the driver is sized for it")
-        val roots = rootRows.map(_.getLong(0)).toSeq
-        if (roots.isEmpty) state.limit(0)
-        else if (roots.size <= maxIdPushdown)
-          state.filter(col("cluster").isin(roots: _*))
-        else state.filter(col("cluster").isInCollection(roots))
+    def distributedFold(): Window = {
+      val pairs = pairsDf.localCheckpoint()
+      val batchDocs = pairs.select(col("a").as("doc_id"))
+        .unionByName(pairs.select(col("b").as("doc_id"))).distinct()
+      // current rows of every touched cluster (pinned version)
+      val old: DataFrame =
+        if (!exists) pairs.select(col("a").as("doc_id"), col("a").as("cluster")).limit(0)
+        else {
+          val coll = graft.api.Collection(spark, statePath)
+          val state = coll.scanVersion(coll.version)
+          // over-bound batches take a PLAIN semi-join, never a forced
+          // broadcast: a corpus-sized batch (the full-log fold
+          // componentsCycle attempts before delegating to the rebuild)
+          // would OOM the driver inside an explicit broadcast() BEFORE
+          // the roots bound below could fire — AQE still auto-broadcasts
+          // genuinely small over-1000-doc batches from runtime stats
+          val touched0 = graft.api.Collection
+            .boundedKeyLits(batchDocs, graft.api.Collection.MaxKeyPushdown)
+            .fold(state.join(batchDocs, Seq("doc_id"), "left_semi"))(
+              vs => state.filter(col("doc_id").isin(vs: _*)))
+          val rootRows = touched0.select(col("cluster")).distinct()
+            .head(maxDriverRoots + 1) // bounded: <= |batch docs| by contract
+          requireRootsBound(rootRows.length)
+          val roots = rootRows.map(_.getLong(0)).toSeq
+          if (roots.isEmpty) state.limit(0)
+          else state.filter(col("cluster").isin(roots: _*))
+        }
+      val oldCk = old.localCheckpoint()
+      // subgraph: batch pairs + one star edge per touched member. A root's
+      // own (root, root) row drops as a self-loop; the root still joins
+      // the subgraph through its members' star edges.
+      val labels = connectedComponentsAltStar(
+        pairs.unionByName(
+          oldCk.select(col("doc_id").as("a"), col("cluster").as("b"))
+            .filter(col("a") =!= col("b"))),
+        "a", "b")
+        .select(col("node").as("doc_id"), col("cluster")).localCheckpoint()
+      // a touched cluster re-roots atomically or not at all: changed =
+      // old roots whose own new label moved (roots only decrease)
+      val changedRoots = oldCk.select(col("cluster")).distinct()
+        .join(labels.withColumnRenamed("cluster", "new_c")
+          .withColumnRenamed("doc_id", "cluster"), Seq("cluster"))
+        .filter(col("new_c") =!= col("cluster"))
+        .select(col("cluster")).collect().map(_.getLong(0)).toSeq
+      // labels covers EVERY member of every touched cluster, so the
+      // aggregated counts are complete; untouched clusters' rows are
+      // never read or written
+      val keepChanges = keepPath.map { _ =>
+        keepRows(labels).localCheckpoint()
+          .withColumn("_keep_del", lit(false))
+          .unionByName(changedRoots.toDF("cluster")
+            .withColumn("keep_id", lit(null).cast("long"))
+            .withColumn("n_members", lit(null).cast("long"))
+            .withColumn("_keep_del", lit(true)))
       }
-    val oldCk = old.localCheckpoint()
-    // subgraph: batch pairs + one star edge per touched member. A root's
-    // own (root, root) row drops as a self-loop; the root still joins
-    // the subgraph through its members' star edges.
-    val labels = connectedComponentsAltStar(
-      pairs.unionByName(
-        oldCk.select(col("doc_id").as("a"), col("cluster").as("b"))
-          .filter(col("a") =!= col("b"))),
-      "a", "b")
-      .select(col("node").as("doc_id"), col("cluster")).localCheckpoint()
-    // a touched cluster re-roots atomically or not at all: changed =
-    // old roots whose own new label moved (roots only decrease)
-    val changedRoots = oldCk.select(col("cluster")).distinct()
-      .join(labels.withColumnRenamed("cluster", "new_c")
-        .withColumnRenamed("doc_id", "cluster"), Seq("cluster"))
-      .filter(col("new_c") =!= col("cluster"))
-      .select(col("cluster")).collect().map(_.getLong(0)).toSeq
+      // rows that stand: members of UNchanged clusters — everything else
+      // (fresh docs, re-rooted members) appends. Subgraph-sized join;
+      // never corpus-sized, never a member-list driver collect.
+      val unchangedOld =
+        if (changedRoots.isEmpty) oldCk
+        else oldCk.filter(!col("cluster").isin(changedRoots: _*))
+      val toAppend = labels
+        .join(unchangedOld.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      (keepChanges, changedRoots, toAppend, toAppend.count())
+    }
+    val (keepChanges, changedRoots, toAppend, appended) =
+      driverFold().getOrElse(distributedFold())
+    // ONE COMMIT ORDER for every window: keep MERGE → state append → DV
+    // delete → compaction.
+    //
     // MATERIALIZED KEEP-LIST maintenance (the h96 partial-recompute
     // shape applied to d36's read): upsert exactly the TOUCHED clusters'
     // (cluster, keep_id, n_members) rows into a cluster-KEYED collection
@@ -450,17 +450,15 @@ object ClusterOps {
     // heals (delete is a no-op, upsert is LWW-idempotent) — whereas
     // maintenance after the state commit could never re-detect a merged-
     // away root on replay (the fold is a no-op then) and would leak its
-    // phantom keep row forever. labels covers EVERY member of every
-    // touched cluster, so the aggregated counts are complete; untouched
-    // clusters' rows are never read or written.
-    keepPath.foreach { kp =>
-      import spark.implicits._
-      val kept = keepRows(labels).localCheckpoint()
+    // phantom keep row forever.
+    for ((kp, changes) <- keepPath.zip(keepChanges)) {
       val keepExists = graft.meta.CollectionMeta.collectionCommitted(
         java.nio.file.Paths.get(kp))
       if (!keepExists && !exists)
         // day 0 of the whole loop: the touched clusters ARE the state
-        kept.write.format("hadro").mode("overwrite")
+        // (and no root can have changed)
+        declared(changes, KeepSchema)
+          .write.format("hadro").mode("overwrite")
           .option("hadro.key", "cluster").save(kp)
       else {
         // keepPath first supplied AFTER the state accumulated clusters:
@@ -470,47 +468,25 @@ object ClusterOps {
         // one-time corpus-proportional cost, then apply this window's
         // touched rows like any other window.
         if (!keepExists)
-          keepList(spark, statePath)
+          declared(keepList(spark, statePath), KeepSchema)
             .write.format("hadro").mode("overwrite")
             .option("hadro.key", "cluster").save(kp)
-        val keep = graft.api.Collection(spark, kp)
         // ONE atomic commit for the whole window's keep maintenance:
         // the merged-away roots' tombstones and the touched clusters'
         // upserts ride a single CDC merge (the h23 primitive), so no
         // crash point can expose a keep-list with the old roots deleted
         // but their replacement rows not yet written.
-        val changes = kept.withColumn("_keep_del", lit(false))
-          .unionByName(changedRoots.toDF("cluster")
-            .withColumn("keep_id", lit(null).cast("long"))
-            .withColumn("n_members", lit(null).cast("long"))
-            .withColumn("_keep_del", lit(true)))
-        if (changedRoots.nonEmpty || !kept.isEmpty)
-          keep.merge(changes, col("_keep_del"))
+        if (changedRoots.nonEmpty || !changes.isEmpty)
+          graft.api.Collection(spark, kp).merge(changes, col("_keep_del"))
       }
     }
-    // rows that stand: members of UNchanged clusters — everything else
-    // (fresh docs, re-rooted members) appends. Subgraph-sized join;
-    // never corpus-sized, never a member-list driver collect.
-    val unchangedOld =
-      if (changedRoots.isEmpty) oldCk
-      else if (changedRoots.size <= maxIdPushdown)
-        oldCk.filter(!col("cluster").isin(changedRoots: _*))
-      else oldCk.filter(!col("cluster").isInCollection(changedRoots))
-    val toAppend = labels
-      .join(unchangedOld.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val appended = toAppend.count()
     if (appended > 0)
-      toAppend.write.format("hadro")
-        .mode(if (exists) "append" else "overwrite")
-        .option("hadro.key", "doc_id").save(statePath)
-    if (changedRoots.nonEmpty) {
-      val cond =
-        if (changedRoots.size <= maxIdPushdown)
-          col("cluster").isin(changedRoots: _*)
-        else col("cluster").isInCollection(changedRoots)
-      graft.spark.HadroDeleteSupport.dvDeleteWhere(p, cond)
-    }
+      (if (exists) toAppend.write.mode("append")
+       else declared(toAppend, StateSchema).write.mode("overwrite"))
+        .format("hadro").option("hadro.key", "doc_id").save(statePath)
+    if (changedRoots.nonEmpty)
+      graft.spark.HadroDeleteSupport.dvDeleteWhere(p,
+        col("cluster").isin(changedRoots: _*))
     // bounded small segments, the LSH-index discipline: a nightly loop
     // appends a few rows per window FOREVER — bin-pack (atomic replace,
     // reader-safe via deferred GC) once the segment count crosses the
@@ -522,7 +498,6 @@ object ClusterOps {
         graft.api.Collection(spark, kp), maxStateFiles))
     }
     appended
-    }
   }
 
   /** The resolved membership view for [[componentsUpdate]] state:
@@ -587,7 +562,6 @@ object ClusterOps {
   def componentsCycle(spark: org.apache.spark.sql.SparkSession,
       pairsPath: String, cursorTag: String, statePath: String,
       aCol: String = "doc_a", bCol: String = "doc_b",
-      maxIdPushdown: Int = graft.api.Collection.MaxKeyPushdown,
       maxDriverRoots: Int = DedupOps.DefaultMaxStateSplit,
       keepPath: Option[String] = None,
       maxStateFiles: Int = 64): Long = {
@@ -600,7 +574,7 @@ object ClusterOps {
     val head = pairs.version
     def fold(w: DataFrame): Unit = {
       componentsUpdate(spark, w.select(col(aCol), col(bCol)), aCol, bCol,
-        statePath, maxIdPushdown, maxDriverRoots, keepPath, maxStateFiles)
+        statePath, maxDriverRoots, keepPath, maxStateFiles)
       ()
     }
     // FULL-snapshot fold with the scale-safe escape hatch: a root-heavy
@@ -724,11 +698,12 @@ object ClusterOps {
         // fold finds nothing changed and never tombstones the clusters
         // the rebuild merged away — permanent phantom keep rows.
         keepPath.foreach { kp =>
-          keepRows(labels)
+          declared(keepRows(labels), KeepSchema)
             .write.format("hadro").mode("overwrite")
             .option("hadro.key", "cluster").save(kp)
         }
-        val w = labels.write.format("hadro").mode("overwrite")
+        val w = declared(labels, StateSchema)
+          .write.format("hadro").mode("overwrite")
           .option("hadro.key", "doc_id")
         if (exists) {
           val m0 = graft.meta.CollectionMeta.currentManifest(p)
@@ -940,7 +915,7 @@ object ClusterOps {
           .option("hadro.compactOfGen", m0.generation.toString)
           .option("hadro.key", "doc_id").save(statePath)
         keepPath.foreach { kp =>
-          keepRows(rerooted)
+          declared(keepRows(rerooted), KeepSchema)
             .write.format("hadro").mode("overwrite")
             .option("hadro.key", "cluster").save(kp)
         }
@@ -997,86 +972,70 @@ object ClusterOps {
     def applyTouched(touched: DataFrame): Unit = {
       val resolved = touched
         .groupBy(col("doc_id")).agg(min(col("cluster")).as("cluster"))
+      // One of two halves resolves each touched doc's keeper into
+      // `changes` (doc_id, cluster, keep_id — NULL when the cluster has
+      // no keep row); the one tail below gates and commits it.
+      //
       // BOUNDED DRIVER-SIDE WINDOW (the componentsUpdate fast-path
       // discipline): a steady window touches a few hundred docs, so ONE
       // bounded head + ONE point read of the cluster-keyed keep-list
       // replace the checkpoint/fetch/empty-probe action chain (~5 fixed
-      // job costs per window). The full-snapshot paths (first-cycle
-      // bootstrap, post-compaction/post-sweep re-derive) are corpus-
-      // proportional and fall through to the distributed shape below.
+      // job costs per window), and `changes` is a local relation whose
+      // emptiness checks start no job. The full-snapshot paths (first-
+      // cycle bootstrap, post-compaction/post-sweep re-derive) are
+      // corpus-proportional and take the distributed half.
       val maxT = graft.api.Collection.MaxKeyPushdown
       val headRows = resolved.head(maxT + 1)
-      if (headRows.length <= maxT) {
-        val m = headRows.map(r => (r.getLong(0), r.getLong(1)))
-        val clusters = m.map(_._2).distinct.toSeq
-        val keepAll = keepListMaterialized(spark, keepPath)
-        val keepMap =
-          if (clusters.isEmpty) Map.empty[Long, Long]
-          else keepAll.filter(
-            if (clusters.size <= maxT) col("cluster").isin(clusters: _*)
-            else col("cluster").isInCollection(clusters))
-            .select(col("cluster"), col("keep_id")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // same loud out-of-step gate as the distributed shape below
-        if (m.exists(t => !keepMap.contains(t._2)))
-          throw new IllegalStateException(
-            s"hadro: curationCycle found touched clusters with no row in " +
-              s"the materialized keep-list at $keepPath — the keep-list is " +
-              "out of step with the membership state (a crashed " +
-              "sweepComponents between its two rewrites, or keep_dir not " +
-              "maintained by the components loop). Re-run " +
-              "sweepComponents(keepPath)/CALL system.sweep_components (or " +
-              "componentsRebuild with keepPath) to heal, then re-run this " +
-              "cycle — the cursor has not moved")
-        val changes = m.map { case (d, c) => (d, c, keepMap(c)) }
-        val dropExists = graft.meta.CollectionMeta.collectionCommitted(
-          java.nio.file.Paths.get(dropPath))
-        import spark.implicits._
-        if (!dropExists)
-          changes.filter(t => t._1 != t._3).toSeq
+      val changes =
+        if (headRows.length <= maxT) {
+          val m = headRows.map(r => (r.getLong(0), r.getLong(1)))
+          val clusters = m.map(_._2).distinct.toSeq
+          val keepMap =
+            if (clusters.isEmpty) Map.empty[Long, Long]
+            else keepListMaterialized(spark, keepPath)
+              .filter(col("cluster").isin(clusters: _*))
+              .select(col("cluster"), col("keep_id")).collect()
+              .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          import spark.implicits._
+          m.toSeq.map { case (d, c) => (d, c, keepMap.get(c)) }
             .toDF("doc_id", "cluster", "keep_id")
-            .write.format("hadro").mode("overwrite")
-            .option("hadro.key", "doc_id").save(dropPath)
-        else if (changes.nonEmpty)
-          graft.api.Collection(spark, dropPath)
-            .merge(changes.toSeq.toDF("doc_id", "cluster", "keep_id"),
-              col("doc_id") === col("keep_id"))
-        return
-      }
-      val m = resolved.localCheckpoint()
-      // keeper lookup restricted to the window's TOUCHED clusters: a
-      // bounded set rides the cluster-KEYED keep collection's scan as an
-      // IN predicate (the filter references only the LWW resolve's
-      // partition key, so it pushes below the window and segment
-      // stats/bloom prune the read); larger sets take a PLAIN semi-join
-      // — NOT a forced broadcast: the full-snapshot paths (first-cycle
-      // bootstrap, post-compaction/post-sweep re-derive) pass a
-      // corpus-proportional touched set that an explicit broadcast()
-      // would collect onto the driver (AQE still auto-broadcasts
-      // genuinely small over-bound sets from runtime stats). Never an
-      // unrestricted keep-list scan per window.
-      val touchedClusters = m.select(col("cluster")).distinct()
-      val keepAll = keepListMaterialized(spark, keepPath)
-      val keep = graft.api.Collection
-        .boundedKeyLits(touchedClusters, graft.api.Collection.MaxKeyPushdown)
-        .fold(keepAll.join(touchedClusters, Seq("cluster"),
-          "left_semi"))(vs =>
-          if (vs.isEmpty) keepAll.limit(0)
-          else keepAll.filter(col("cluster").isin(vs: _*)))
-      // LEFT join + loud gate, not an inner join: a touched cluster with
-      // no keep row means the keep-list is OUT OF STEP with the state
-      // (the signature of a sweep that crashed between its state and
-      // keep rewrites). An inner join would silently drop those docs'
-      // status updates — including the tombstone that PROMOTES a keeper
-      // whose predecessor died — and still advance the cursor,
-      // corrupting the drop list until an unrelated rewrite. Refuse
-      // instead, naming the repair verb; the cursor does not move, so
-      // the healed loop replays this window cleanly.
-      val changes = m
-        .join(keep.select(col("cluster"), col("keep_id")), Seq("cluster"),
-          "left")
-        .select(col("doc_id"), col("cluster"), col("keep_id"))
-        .localCheckpoint()
+        } else {
+          val m = resolved.localCheckpoint()
+          // keeper lookup restricted to the window's TOUCHED clusters: a
+          // bounded set rides the cluster-KEYED keep collection's scan as
+          // an IN predicate (the filter references only the LWW
+          // resolve's partition key, so it pushes below the window and
+          // segment stats/bloom prune the read); larger sets take a
+          // PLAIN semi-join — NOT a forced broadcast: the full-snapshot
+          // paths pass a corpus-proportional touched set that an
+          // explicit broadcast() would collect onto the driver (AQE
+          // still auto-broadcasts genuinely small over-bound sets from
+          // runtime stats). Never an unrestricted keep-list scan per
+          // window.
+          val touchedClusters = m.select(col("cluster")).distinct()
+          val keepAll = keepListMaterialized(spark, keepPath)
+          val keep = graft.api.Collection
+            .boundedKeyLits(touchedClusters, maxT)
+            .fold(keepAll.join(touchedClusters, Seq("cluster"),
+              "left_semi"))(vs =>
+              if (vs.isEmpty) keepAll.limit(0)
+              else keepAll.filter(col("cluster").isin(vs: _*)))
+          // LEFT join, not an inner join: the gate below must see the
+          // touched clusters that have no keep row
+          m.join(keep.select(col("cluster"), col("keep_id")),
+              Seq("cluster"), "left")
+            .select(col("doc_id"), col("cluster"), col("keep_id"))
+            .localCheckpoint()
+        }
+      // LOUD out-of-step gate: a touched cluster with no keep row means
+      // the keep-list is OUT OF STEP with the state (the signature of a
+      // sweep that crashed between its state and keep rewrites).
+      // Dropping those docs silently would lose their status updates —
+      // including the tombstone that PROMOTES a keeper whose predecessor
+      // died — and still advance the cursor, corrupting the drop list
+      // until an unrelated rewrite. Refuse instead, naming the repair
+      // verb; the cursor does not move, so the healed loop replays this
+      // window cleanly.
       if (!changes.filter(col("keep_id").isNull).isEmpty)
         throw new IllegalStateException(
           s"hadro: curationCycle found touched clusters with no row in " +
@@ -1090,7 +1049,8 @@ object ClusterOps {
       val dropExists = graft.meta.CollectionMeta.collectionCommitted(
         java.nio.file.Paths.get(dropPath))
       if (!dropExists)
-        changes.filter(col("doc_id") =!= col("keep_id"))
+        declared(changes.filter(col("doc_id") =!= col("keep_id")),
+          DropSchema)
           .write.format("hadro").mode("overwrite")
           .option("hadro.key", "doc_id").save(dropPath)
       else if (!changes.isEmpty) // quiet window: no zero-row commit

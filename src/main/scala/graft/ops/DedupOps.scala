@@ -673,8 +673,7 @@ object DedupOps {
       // everything falls back to the r18 checkpoint/broadcast shape —
       // nothing driver-resident beyond the bounded head, same results.
       val fetched = restricted.head(maxIdPushdown + 1)
-      val fetchedTriple: (DataFrame, Option[Seq[Any]],
-          Option[Array[org.apache.spark.sql.Row]]) =
+      val (cands, candLits, bounded) =
         if (fetched.length <= maxIdPushdown) {
           val ia = restricted.schema.fieldIndex("doc_a")
           val ib = restricted.schema.fieldIndex("doc_b")
@@ -683,9 +682,9 @@ object DedupOps {
           // delete-awareness, driver-side: each pair's OLD sides (false
           // new-flag = not in tonight's batch) must still be live. One
           // point-read of `live` restricted to the bounded old-id set
-          // (IN pushdown when it fits, map-only InSet scan otherwise)
-          // replaces the distributed gate's checkpoint + three broadcast
-          // materializations; new sides are live by definition.
+          // (an IN predicate) replaces the distributed gate's checkpoint
+          // + three broadcast materializations; new sides are live by
+          // definition.
           val kept = live match {
             case None => fetched
             case Some(lv) =>
@@ -697,11 +696,8 @@ object DedupOps {
               }.toSeq.distinct
               if (oldIds.isEmpty) fetched
               else {
-                val lcol = col(lv.columns.head)
-                val cond =
-                  if (oldIds.size <= maxIdPushdown) lcol.isin(oldIds: _*)
-                  else lcol.isInCollection(oldIds)
-                val liveOld = lv.filter(cond).select(lv.columns.head)
+                val liveOld = lv.filter(col(lv.columns.head).isin(oldIds: _*))
+                  .select(lv.columns.head)
                   .distinct().collect().map(_.get(0)).toSet
                 fetched.filter { r =>
                   (r.getBoolean(ifa) || liveOld.contains(r.get(ia))) &&
@@ -719,7 +715,7 @@ object DedupOps {
           val ids = kept.iterator
             .flatMap(r => Iterator(r.get(ia), r.get(ib))).toSeq.distinct
           (localDf, if (ids.size <= maxIdPushdown) Some(ids) else None,
-            Some(kept))
+            true)
         } else {
           // over-bound fallback: the r18 shape. Delete-awareness first —
           // the candidates' old-side ids broadcast into a map-only scan
@@ -748,11 +744,8 @@ object DedupOps {
           val candIds = cs.select(col("doc_a").as("doc_id"))
             .unionByName(cs.select(col("doc_b").as("doc_id"))).distinct()
           (cs, graft.api.Collection.boundedKeyLits(candIds, maxIdPushdown),
-            None)
+            false)
         }
-      val cands = fetchedTriple._1
-      val candLits = fetchedTriple._2
-      val localRows = fetchedTriple._3
       val src = candLits.fold(allSets)(vs =>
         allSets.filter(col("doc_id").isin(vs: _*)))
       if (!extendIndex) verified(cands, src)
@@ -764,18 +757,16 @@ object DedupOps {
       // into a driver-local relation — cheaper than a checkpoint,
       // equally mutation-proof, and the empty-window check is free.
       val vdf = verified(cands, src)
-      val resultPair: (DataFrame, () => Boolean) = localRows match {
-        case Some(_) =>
+      val (result, resultEmpty) =
+        if (bounded) {
           val rs = vdf.collect()
           val lst = new java.util.ArrayList[org.apache.spark.sql.Row](rs.length)
           rs.foreach(lst.add)
           (spark.createDataFrame(lst, vdf.schema), () => rs.isEmpty)
-        case None =>
+        } else {
           val r = vdf.localCheckpoint()
           (r, () => r.isEmpty)
-      }
-      val result = resultPair._1
-      val resultEmpty = resultPair._2
+        }
       // PERSISTED PAIR STREAM (the composed-pipeline seam): append the
       // window's pairs to an append-only hadro collection INSIDE the
       // lease, BEFORE the index mutates. Exactly-once across crash
@@ -865,16 +856,12 @@ object DedupOps {
         // table; no per-stage checkpoint jobs)
         val changed = split.filter(!_._2).map(_._1).toSeq
         if (changed.nonEmpty) {
-          // bounded change sets ride a literal IN — it reaches the scan
-          // as a pushed source filter, so per-segment stats (and the key
-          // bloom on the keyed sets table) prune the delete's read to
-          // the touched segments; larger sets fall back to a map-only
-          // InSet filter scan
-          val cond =
-            if (changed.size <= maxIdPushdown) col("doc_id").isin(changed: _*)
-            else col("doc_id").isInCollection(changed)
+          // the change set rides a literal IN — it reaches the scan as a
+          // pushed source filter, so per-segment stats (and the key bloom
+          // on the keyed sets table) prune the delete's read to the
+          // touched segments
           graft.spark.HadroDeleteSupport.dvDeleteWhere(
-            java.nio.file.Paths.get(tbl.path), cond)
+            java.nio.file.Paths.get(tbl.path), col("doc_id").isin(changed: _*))
         }
         val unchanged = split.filter(_._2).map(_._1).toSeq
         val toWrite = if (unchanged.isEmpty) rows

@@ -1826,19 +1826,25 @@ class OpsSpec extends SparkSuite {
     // distributed alt-star fold; folded as two 600-pair windows each
     // window fits the bound and takes the driver union-find (window 2
     // additionally pulls window 1's cluster members — the member-fetch
-    // branch). Both must land the identical state and keep-list.
+    // branch). Both must land the identical state and keep-list. The
+    // curation cycles split the same way: st1's one cycle touches 1201
+    // docs (over the bound: the distributed half), st2's touch at most
+    // 601 each (the driver half).
     val dir = java.nio.file.Files.createTempDirectory("dfold").toString
-    val st1 = s"$dir/s1"; val kp1 = s"$dir/k1"
-    val st2 = s"$dir/s2"; val kp2 = s"$dir/k2"
+    val st1 = s"$dir/s1"; val kp1 = s"$dir/k1"; val dp1 = s"$dir/d1"
+    val st2 = s"$dir/s2"; val kp2 = s"$dir/k2"; val dp2 = s"$dir/d2"
     ClusterOps.componentsUpdate(spark,
       (0L until 1200L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
       st1, keepPath = Some(kp1))
+    ClusterOps.curationCycle(spark, st1, "cur", kp1, dp1)
     ClusterOps.componentsUpdate(spark,
       (0L until 600L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
       st2, keepPath = Some(kp2))
+    ClusterOps.curationCycle(spark, st2, "cur", kp2, dp2)
     ClusterOps.componentsUpdate(spark,
       (600L until 1200L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
       st2, keepPath = Some(kp2))
+    ClusterOps.curationCycle(spark, st2, "cur", kp2, dp2)
     val m1 = ClusterOps.components(spark, st1)
       .as[(Long, Long)].collect().sorted.toSeq
     val m2 = ClusterOps.components(spark, st2)
@@ -1851,6 +1857,19 @@ class OpsSpec extends SparkSuite {
       .as[(Long, Long, Long)].collect().sorted.toSeq
     assert(k1 == Seq((0L, 0L, 1201L)), k1.toString)
     assert(k1 == k2, s"keep lists diverged: $k1 vs $k2")
+    val d1 = ClusterOps.dropList(spark, dp1)
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    val d2 = ClusterOps.dropList(spark, dp2)
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(d1 == (1L to 1200L).map(d => (d, 0L, 0L)), d1.take(5).toString)
+    assert(d1 == d2, s"drop lists diverged: ${d1.take(5)} vs ${d2.take(5)}")
+    // one stored schema per collection, whichever half created it
+    def stored(p: String) =
+      graft.meta.CollectionMeta.readSchema(java.nio.file.Paths.get(p))
+    Seq((st1, st2), (kp1, kp2), (dp1, dp2)).foreach { case (a, b) =>
+      assert(stored(a).isDefined && stored(a) == stored(b),
+        s"stored schemas diverged: ${stored(a)} vs ${stored(b)}")
+    }
   }
 
   test("LSH index probe never emits an old-old pair, even when mustCheck " +
@@ -2823,6 +2842,10 @@ class OpsSpec extends SparkSuite {
         .as[(Long, Long, Long)].collect().sorted.toSeq ==
       ClusterOps.keepListMaterialized(spark, kp)
         .as[(Long, Long, Long)].collect().sorted.toSeq)
+    def stored(p: String) =
+      graft.meta.CollectionMeta.readSchema(java.nio.file.Paths.get(p))
+    assert(stored(st2) == stored(st) && stored(kp2) == stored(kp),
+      "the rebuild created different stored schemas than the folds")
     // window 2 lands touching ALL four clusters, then a bin-pack
     // consumes the in-window append while the consumer still lags —
     // the changefeed walk refuses; with maxDriverRoots below the
@@ -2999,6 +3022,22 @@ class OpsSpec extends SparkSuite {
     val drops = ClusterOps.dropList(spark, dropP)
       .as[(Long, Long, Long)].collect().sorted.toSeq
     assert(drops == Seq((11L, 10L, 10L), (21L, 20L, 20L)), drops.toString)
+    // the same refusal when the window is over the driver bound (1200
+    // touched docs in 600 clusters, one missing from the keep-list), so
+    // the distributed half resolves it
+    val stBig = s"$wh/state_big"; val kpBig = s"$wh/keep_big"
+    ClusterOps.componentsUpdate(spark,
+      (0L until 600L).map(i => (100L + 2 * i, 101L + 2 * i)).toDF("a", "b"),
+      "a", "b", stBig)
+    ClusterOps.keepList(spark, stBig).filter($"cluster" =!= 100L)
+      .write.format("hadro").mode("overwrite")
+      .option("hadro.key", "cluster").save(kpBig)
+    val eBig = intercept[IllegalStateException] {
+      ClusterOps.curationCycle(spark, stBig, "cg_cur", kpBig, s"$wh/drops_big")
+    }
+    assert(eBig.getMessage == e.getMessage.replace(kp, kpBig), eBig.getMessage)
+    assert(!graft.api.Collection(spark, stBig).tags.contains("cg_cur"),
+      "the refused over-bound cycle must not advance the cursor")
   }
 
   test("componentsCycle routes a corpus-scale first fold (distinct docs " +
