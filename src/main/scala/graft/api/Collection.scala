@@ -982,9 +982,10 @@ final class Collection private (spark: SparkSession, val path: String) {
     * the inode lives until every clone drops it. The clone starts a
     * fresh history (version 1, generation 0, no stream epochs) — it is
     * a new table whose contents equal the source snapshot, the instant
-    * dev/test-copy primitive at any scale. Non-manifest `_hadro`
-    * sidecars (tokenizer vocab, sq8 params) are copied so index
-    * collections stay queryable through their clones. */
+    * dev/test-copy primitive at any scale. The metadata slots declared
+    * to ride a clone (constraints, write order, tokenizer vocab, index
+    * params) are copied so index collections stay queryable through
+    * their clones. */
   def cloneTo(dstPath: String): Collection = {
     val m = manifest
     val dst = java.nio.file.Paths.get(dstPath)
@@ -1003,20 +1004,11 @@ final class Collection private (spark: SparkSession, val path: String) {
       val dstF = dst.resolve(f)
       graft.meta.FileIO.impl.linkOrCopy(srcF, dstF)
     }
-    // non-manifest metadata sidecars ride along (vocab.json, sq8-params,
-    // constraints.json…) — but NOT refs.json/branches.json: tags and
-    // branch heads pin VERSIONS, and the clone starts a fresh history
-    // where those versions don't exist
-    CollectionMeta.listDir(CollectionMeta.metaDir(dir))
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("manifest-") && !n.startsWith("dead-") &&
-          !n.startsWith(".tmp") && n != "schema.json" && n != "refs.json" &&
-          n != "branches.json" && n != "branch.lock"
-      }
-      .foreach(p => Files.copy(p,
-        CollectionMeta.metaDir(dst).resolve(p.getFileName.toString),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    // declarative config and index sidecars ride along (constraints,
+    // vocab, sq8 params…) — but NOT refs, branches or the consumer
+    // registry: they name versions and cursors of the source history,
+    // and the clone starts a fresh one where those don't exist
+    CollectionMeta.cloneSlots(dir, dst)
     CollectionMeta.commit(dst, _ =>
       m.copy(streamEpochs = Map.empty, generation = 0L))
     // Branch bookkeeping for write-audit-publish: remember which source
@@ -1024,11 +1016,7 @@ final class Collection private (spark: SparkSession, val path: String) {
     // the source advanced underneath the branch (optimistic concurrency —
     // the Iceberg fast-forward refusal) instead of silently replacing
     // concurrent commits.
-    Files.write(CollectionMeta.metaDir(dst).resolve("clone-origin.json"),
-      org.json4s.jackson.Serialization.write(Map(
-        "source" -> dir.toAbsolutePath.toString,
-        "version" -> m.version))(org.json4s.DefaultFormats)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    CollectionMeta.writeCloneOrigin(dst, dir, m.version)
     Collection(spark, dstPath)
   }
 
@@ -1054,21 +1042,15 @@ final class Collection private (spark: SparkSession, val path: String) {
     // past that base, commits landed that the swap would silently replace
     // — refuse unless forced. A successful publish fast-forwards the
     // branch base, so re-publishing the same stage stays allowed.
-    val originFile = CollectionMeta.metaDir(staged).resolve("clone-origin.json")
-    if (!force && Files.exists(originFile)) {
-      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-      val root = org.json4s.jackson.JsonMethods.parse(new String(
-        Files.readAllBytes(originFile), java.nio.charset.StandardCharsets.UTF_8))
-      val osrc = (root \ "source").extract[String]
-      val base = (root \ "version").extract[Long]
-      if (osrc == dir.toAbsolutePath.toString) {
+    if (!force) CollectionMeta.readCloneOrigin(staged).foreach {
+      case (osrc, base) if osrc == dir.toAbsolutePath.toString =>
         val cur = CollectionMeta.currentManifest(dir).version
         require(cur == base,
           s"hadro: publish refused — target advanced (version $base at " +
             s"branch time, now $cur); commits would be silently replaced. " +
             s"Re-stage from the current state, or publishFrom(force = true) " +
             s"to replace anyway")
-      }
+      case _ => ()
     }
     val targetMeta = CollectionMeta.readSchema(dir).getOrElse(
       throw new IllegalStateException(s"hadro: no collection at $path"))
@@ -1138,11 +1120,7 @@ final class Collection private (spark: SparkSession, val path: String) {
     val live = sm.segments.flatMap(_.allFiles).toSet
     CollectionMeta.deferredGc(dir, live)
     // fast-forward the branch base onto what it just published
-    Files.write(originFile,
-      org.json4s.jackson.Serialization.write(Map(
-        "source" -> dir.toAbsolutePath.toString,
-        "version" -> committed.version))(org.json4s.DefaultFormats)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    CollectionMeta.writeCloneOrigin(staged, dir, committed.version)
     committed.version
   }
 
@@ -1154,28 +1132,16 @@ final class Collection private (spark: SparkSession, val path: String) {
     * A later truncate/compaction WILL sweep strays into its deferred
     * dead-list — but a collection that is only ever appended to never
     * runs one, so at 100 TB crash leftovers are silent storage leaks
-    * until an operator asks. Returns (file, bytes). */
+    * until an operator asks. Returns (file, bytes). An unreadable
+    * dead-list throws: its files cannot be told apart from orphans. */
   def orphanFiles(): Seq[(String, Long)] = {
     val referenced = CollectionMeta.retainedManifests(dir)
       .flatMap(_.segments).flatMap(_.allFiles).toSet
-    val deadListed = CollectionMeta.listDir(CollectionMeta.metaDir(dir))
-      .filter(_.getFileName.toString.matches("dead-\\d+\\.json"))
-      .flatMap { dl =>
-        try {
-          org.json4s.jackson.JsonMethods.parse(
-            new String(Files.readAllBytes(dl),
-              java.nio.charset.StandardCharsets.UTF_8)) match {
-            case org.json4s.JArray(vs) =>
-              vs.collect { case org.json4s.JString(s) => s }
-            case _ => Nil
-          }
-        } catch { case _: Exception => Nil }
-      }.toSet
+    val deadListed = CollectionMeta.deadListed(dir)
     CollectionMeta.listDir(dir)
       .filter(p => Files.isRegularFile(p))
       .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".data") || n.endsWith(".bloom") ||
-        n.endsWith(".koff") || n.endsWith(".dv") || n.endsWith(".zdict"))
+      .filter(CollectionMeta.isSegmentFile)
       .filterNot(referenced)
       .filterNot(deadListed)
       .map(n => n -> Files.size(dir.resolve(n)))

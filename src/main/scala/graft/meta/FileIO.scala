@@ -14,8 +14,13 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
   * The four primitives and what each really requires:
   *
   *  1. [[replaceSlot]] — atomic whole-file replace of a SINGLETON
-  *     metadata slot (schema.json, refs.json, branches.json,
-  *     constraints.json, writeorder.json). Requirement: readers see the
+  *     metadata slot: every non-manifest JSON file in `_hadro/`, all
+  *     written by [[CollectionMeta.writeSlot]] — schema.json,
+  *     writeorder.json, constraints.json, refs.json, consumers.json,
+  *     branches.json, clone-origin.json, the index and tokenizer
+  *     sidecars (ivf-centroids.json, pq-codebook.json, sq8-params.json,
+  *     vocab.json) and the deferred-GC dead-lists (dead-<n>.json).
+  *     Requirement: readers see the
   *     old bytes or the new bytes, never a mix, never absence. POSIX:
   *     write-temp + rename(2) (ATOMIC_MOVE, REPLACE_EXISTING). S3: one
   *     unconditional PUT of the slot key — a PUT is already atomic and

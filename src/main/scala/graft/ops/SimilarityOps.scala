@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.meta.CollectionMeta
+
 /** Vector similarity search over an `Array[Float]` embedding column.
   *
   * All math happens in double precision through codegen'd higher-order
@@ -226,31 +228,20 @@ object SimilarityOps {
     collection
   }
 
-  private def centroidsFile(dir: java.nio.file.Path): java.nio.file.Path =
-    dir.resolve("_hadro").resolve("ivf-centroids.json")
-
   private def saveCentroids(dir: java.nio.file.Path,
-      cents: Seq[(Int, Seq[Float])]): Unit = {
-    val json = cents.sortBy(_._1).map { case (cid, v) =>
-      s"""{"cid":$cid,"vec":[${v.mkString(",")}]}"""
-    }.mkString("[", ",", "]")
-    java.nio.file.Files.createDirectories(dir.resolve("_hadro"))
-    java.nio.file.Files.write(centroidsFile(dir),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+      cents: Seq[(Int, Seq[Float])]): Unit =
+    CollectionMeta.writeSlot(dir, CollectionMeta.IvfCentroidsSlot,
+      Some(cents.sortBy(_._1).map { case (cid, v) =>
+        s"""{"cid":$cid,"vec":[${v.mkString(",")}]}"""
+      }.mkString("[", ",", "]")))
 
   /** Centroids persisted by [[buildIvfIndex]], if any. */
-  def loadCentroids(dir: java.nio.file.Path): Option[Seq[(Int, Seq[Float])]] = {
-    val f = centroidsFile(dir)
-    if (!java.nio.file.Files.exists(f)) return None
-    val root = org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    Some(root.extract[Seq[Map[String, Any]]].map { m =>
+  def loadCentroids(dir: java.nio.file.Path): Option[Seq[(Int, Seq[Float])]] =
+    CollectionMeta.readJson[Seq[Map[String, Any]]](dir,
+      CollectionMeta.IvfCentroidsSlot).map(_.map { m =>
       (m("cid").asInstanceOf[Number].intValue(),
         m("vec").asInstanceOf[Seq[Number]].map(_.floatValue()))
     })
-  }
 
   /** One Lloyd refinement pass: assign every vector to its nearest centroid
     * (map-only `greatest()` over broadcast centroid literals — no join, no
@@ -577,29 +568,18 @@ object SimilarityOps {
       .limit(kResults)
   }
 
-  private def codebookFile(dir: java.nio.file.Path): java.nio.file.Path =
-    dir.resolve("_hadro").resolve("pq-codebook.json")
-
   private def saveCodebook(dir: java.nio.file.Path,
-      codebook: Seq[Seq[Seq[Float]]]): Unit = {
-    val json = codebook.map(js =>
-      js.map(cv => cv.mkString("[", ",", "]")).mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
-    java.nio.file.Files.createDirectories(dir.resolve("_hadro"))
-    java.nio.file.Files.write(codebookFile(dir),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+      codebook: Seq[Seq[Seq[Float]]]): Unit =
+    CollectionMeta.writeSlot(dir, CollectionMeta.PqCodebookSlot,
+      Some(codebook.map(js =>
+        js.map(cv => cv.mkString("[", ",", "]")).mkString("[", ",", "]"))
+        .mkString("[", ",", "]")))
 
   /** Codebook persisted by [[buildPqIndex]], if any:
     * codebook(subspace)(code) = sub-centroid vector. */
-  def loadCodebook(dir: java.nio.file.Path): Option[Seq[Seq[Seq[Float]]]] = {
-    val f = codebookFile(dir)
-    if (!java.nio.file.Files.exists(f)) return None
-    val root = org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    Some(root.extract[Seq[Seq[Seq[Double]]]].map(_.map(_.map(_.toFloat))))
-  }
+  def loadCodebook(dir: java.nio.file.Path): Option[Seq[Seq[Seq[Float]]]] =
+    CollectionMeta.readJson[Seq[Seq[Seq[Double]]]](dir,
+      CollectionMeta.PqCodebookSlot).map(_.map(_.map(_.map(_.toFloat))))
 
   /** recall@k of each labelled approximate top-k frame against the exact
     * top-k: |approx ∩ exact| / k per method, one row per method. Every
@@ -1072,25 +1052,13 @@ object SimilarityOps {
       .transform(c => bruteForceTopK(c, idCol, vecCol, query, k))
   }
 
-  private def sqParamsFile(dir: java.nio.file.Path): java.nio.file.Path =
-    dir.resolve("_hadro").resolve("sq8-params.json")
-
   private def saveSqParams(dir: java.nio.file.Path, minv: Double,
-      scale: Double): Unit = {
-    java.nio.file.Files.createDirectories(dir.resolve("_hadro"))
-    java.nio.file.Files.write(sqParamsFile(dir),
-      s"""{"minv":$minv,"scale":$scale}""".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-  }
+      scale: Double): Unit =
+    CollectionMeta.writeSlot(dir, CollectionMeta.Sq8ParamsSlot,
+      Some(s"""{"minv":$minv,"scale":$scale}"""))
 
   /** Quantizer params persisted by [[buildSqIndex]], if any. */
-  def loadSqParams(dir: java.nio.file.Path): Option[(Double, Double)] = {
-    val f = sqParamsFile(dir)
-    if (!java.nio.file.Files.exists(f)) return None
-    val root = org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val m = root.extract[Map[String, Double]]
-    Some((m("minv"), m("scale")))
-  }
+  def loadSqParams(dir: java.nio.file.Path): Option[(Double, Double)] =
+    CollectionMeta.readJson[Map[String, Double]](dir,
+      CollectionMeta.Sq8ParamsSlot).map(m => (m("minv"), m("scale")))
 }

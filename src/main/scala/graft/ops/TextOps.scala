@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.meta.CollectionMeta
+
 /** Text-analysis primitives for large-scale training-data pipelines.
   *
   * Everything here composes built-in codegen'd SQL functions — no UDFs — so
@@ -460,29 +462,19 @@ object TextOps {
   // ------------------------------------------------- vocab-sidecar tokenizer
 
   /** Persist a tokenizer vocabulary as a collection sidecar
-    * (`_hadro/vocab.json`, piece ids = 1-based list positions) — the
+    * (`vocab.json` metadata slot, piece ids = 1-based list positions) — the
     * model-adjacent artifact a tokenization pipeline ships with its data.
     * Tiny (vocabularies are KBs), loaded once driver-side and broadcast
     * inside the expression. */
   def saveVocab(dir: java.nio.file.Path, pieces: Seq[String]): Unit = {
     require(pieces.nonEmpty && pieces.distinct.length == pieces.length,
       "vocab must be non-empty with distinct pieces")
-    java.nio.file.Files.createDirectories(dir.resolve("_hadro"))
-    val json = org.json4s.jackson.Serialization.write(pieces)(
-      org.json4s.DefaultFormats)
-    java.nio.file.Files.write(dir.resolve("_hadro").resolve("vocab.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    CollectionMeta.writeEntries(dir, CollectionMeta.VocabSlot, pieces)
   }
 
   /** The vocabulary persisted by [[saveVocab]], if any. */
-  def loadVocab(dir: java.nio.file.Path): Option[Seq[String]] = {
-    val f = dir.resolve("_hadro").resolve("vocab.json")
-    if (!java.nio.file.Files.exists(f)) return None
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    Some(org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8)).extract[Seq[String]])
-  }
+  def loadVocab(dir: java.nio.file.Path): Option[Seq[String]] =
+    CollectionMeta.readJson[Seq[String]](dir, CollectionMeta.VocabSlot)
 
   /** Greedy longest-match subword tokenization over `vocab`
     * ([[graft.functions.GreedyTokenize]]): array of 1-based piece ids,

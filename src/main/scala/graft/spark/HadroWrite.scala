@@ -1069,6 +1069,7 @@ final class HadroBatchWrite(path: Path, schema: StructType,
           sortedBy = sBy)
       }
     })
+    published = !conflicted
     if (conflicted) {
       if (replaceSpec.isDefined) {
         abort(messages) // clean up the orphaned new segment files
@@ -1159,9 +1160,15 @@ final class HadroBatchWrite(path: Path, schema: StructType,
     }
   }
 
+  // Set once this write's manifest is published: its task files then
+  // belong to a committed version. Spark calls abort() when commit()
+  // throws, and a failure in the housekeeping after the publish (deferred
+  // GC's dead-list write) must not delete the files the new version reads.
+  @volatile private var published = false
+
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: HadroCommitMessage => m.infos }.flatten
-      .flatMap(_.allFiles)
+    if (!published) messages.collect { case m: HadroCommitMessage => m.infos }
+      .flatten.flatMap(_.allFiles)
       .foreach(f => Files.deleteIfExists(Paths.get(path.toString, f)))
 }
 

@@ -2,6 +2,8 @@ package graft.meta
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import graft.api.Collection
 
@@ -138,5 +140,76 @@ class ObjectStoreFileIOSpec extends SparkSuite {
       assert(cloned.toDF().select("k").as[Long].collect().sorted.toSeq ==
         Seq(1L, 2L, 3L))
     }
+    // Every metadata slot those verbs (and the index builds, vocab save
+    // and deferred GC around them) leave in `_hadro/` must have gone
+    // through the seam: each file's bytes are the last bytes replaceSlot
+    // published for it. A direct Files.write would assume a local disk.
+    underEachFileIO { io =>
+      val rec = new RecordingFileIO(FileIO.impl)
+      val prev = FileIO.impl
+      FileIO.impl = rec
+      try {
+        val base = Files.createTempDirectory(s"seam_$io")
+        val embs = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(64)
+        def ix(n: String) = base.resolve(n).toString
+        graft.ops.SimilarityOps.buildIvfIndex(spark, ix("ivf"), embs,
+          "vec_id", "embedding", kCentroids = 2, numSegments = 1)
+        graft.ops.SimilarityOps.buildPqIndex(spark, ix("pq"), embs,
+          "vec_id", "embedding", numSegments = 1, iterations = 0)
+        graft.ops.SimilarityOps.buildSqIndex(spark, ix("sq"), embs,
+          "vec_id", "embedding", numSegments = 1)
+        val src = Collection.create(spark, ix("src"), Seq((1L, "a")).toDF("k", "v"))
+        graft.ops.TextOps.saveVocab(base.resolve("src"), Seq("a", "b"))
+        val stage = src.cloneTo(ix("stage"))
+        Seq((2L, "b")).toDF("k", "v").write.format("hadro").mode("append")
+          .save(src.path)
+        stage.compact() // the stage's first dead-list
+        // the source's v1 and v2 segments go dead-listed; a tag on v1 then
+        // pins part of that list, so the next compaction REWRITES it
+        src.publishFrom(stage.path, force = true)
+        src.createTag("pin", 1L)
+        src.compact()
+        val published = rec.published.asScala.groupBy(_._1)
+          .map { case (t, ws) => t -> ws.last._2 }
+        val slots = Seq("ivf", "pq", "sq", "src", "stage").flatMap { n =>
+          CollectionMeta.listDir(CollectionMeta.metaDir(base.resolve(n)))
+            .filterNot { p =>
+              val f = p.getFileName.toString
+              f.matches("manifest-\\d{10}\\.json") || f.endsWith(".lock") ||
+                f.endsWith(".lease")
+            }
+        }
+        Seq("ivf-centroids.json", "pq-codebook.json", "sq8-params.json",
+          "vocab.json", "clone-origin.json")
+          .foreach(f => assert(slots.exists(_.getFileName.toString == f), s"$io: no $f"))
+        assert(slots.count(_.getFileName.toString.startsWith("dead-")) >= 2,
+          s"$io: expected dead-lists in both collections: $slots")
+        val bypassed = slots.filterNot(p => published.get(p.toAbsolutePath.normalize)
+          .exists(_.sameElements(Files.readAllBytes(p))))
+        assert(bypassed.isEmpty,
+          s"$io: written around FileIO.replaceSlot: ${bypassed.mkString(", ")}")
+        assert(rec.published.asScala.map(_._1).toSeq.filter(
+            _.getFileName.toString.startsWith("dead-")).groupBy(identity)
+          .exists(_._2.size >= 2), s"$io: no dead-list rewrite went through the seam")
+      } finally FileIO.impl = prev
+    }
   }
+}
+
+/** Delegates to `inner`, recording each replaceSlot target and the bytes
+  * published to it. */
+private class RecordingFileIO(inner: FileIO) extends FileIO {
+  val published =
+    new java.util.concurrent.ConcurrentLinkedQueue[(java.nio.file.Path, Array[Byte])]
+  override def replaceSlot(tmp: java.nio.file.Path,
+      target: java.nio.file.Path): Unit = {
+    published.add(target.toAbsolutePath.normalize -> Files.readAllBytes(tmp))
+    inner.replaceSlot(tmp, target)
+  }
+  override def publishNew(tmp: java.nio.file.Path,
+      target: java.nio.file.Path): Boolean = inner.publishNew(tmp, target)
+  override def withFileLock[T](lockFile: java.nio.file.Path)(body: => T): T =
+    inner.withFileLock(lockFile)(body)
+  override def linkOrCopy(src: java.nio.file.Path,
+      dst: java.nio.file.Path): Unit = inner.linkOrCopy(src, dst)
 }

@@ -3210,6 +3210,19 @@ class OpsSpec extends SparkSuite {
           .as[(Long, Long)].collect().sorted.toSeq ==
         Seq((10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L)), p)
     }
+    // a CLONE of the log starts a fresh history without the source's
+    // cursor tags, so it must not inherit the source's consumer registry
+    // either: its own consumer registers, cycles and sweeps like on any
+    // log, instead of tripping over spA/spB as half-finished decommissions
+    val cloneP = s"$wh/pairs_clone"; val stC = s"$wh/stateC"
+    graft.api.Collection(spark, pairsP).cloneTo(cloneP)
+    ClusterOps.componentsCycle(spark, cloneP, "spC", stC)
+    assert(graft.meta.CollectionMeta.readConsumers(
+      java.nio.file.Paths.get(cloneP)).keySet == Set("spC"))
+    assert(ClusterOps.sweepPairs(spark, cloneP, stC) == 0L)
+    assert(ClusterOps.components(spark, stC)
+        .as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L)))
   }
 
   test("a snapshot pin keeps its pre-sweep pair-log snapshot readable " +

@@ -310,25 +310,27 @@ class BranchSpec extends SparkSuite {
 
   test("heavy branch staging never GCs the main head (shared version " +
       "space inflation)") {
-    val path = Files.createTempDirectory("branchflood").resolve("c").toString
-    (1L to 7L).toDF("id").coalesce(1)
-      .write.format("hadro").mode("overwrite").save(path)
-    val c = Collection(spark, path)
-    c.createBranch("flood")
-    // KeepVersions + several staged commits: the newest version races far
-    // past the main head — count-based ageout must still keep main alive
-    (1 to CollectionMeta.KeepVersions + 4).foreach { i =>
-      Seq(1000L + i).toDF("id").coalesce(1).write.format("hadro")
-        .option("hadro.branch", "flood").mode("append").save(path)
+    underEachFileIO { io =>
+      val path = Files.createTempDirectory(s"branchflood_$io").resolve("c").toString
+      (1L to 7L).toDF("id").coalesce(1)
+        .write.format("hadro").mode("overwrite").save(path)
+      val c = Collection(spark, path)
+      c.createBranch("flood")
+      // KeepVersions + several staged commits: the newest version races far
+      // past the main head — count-based ageout must still keep main alive
+      (1 to CollectionMeta.KeepVersions + 4).foreach { i =>
+        Seq(1000L + i).toDF("id").coalesce(1).write.format("hadro")
+          .option("hadro.branch", "flood").mode("append").save(path)
+      }
+      assert(spark.read.format("hadro").load(path).count() == 7,
+        s"$io: main head manifest must survive branch-version inflation")
+      assert(c.version > 0, s"$io: main line must not reset to the empty manifest")
+      // and the staged line is intact too
+      assert(spark.read.format("hadro")
+        .option("hadro.versionAsOf", "flood").load(path).count() ==
+        7 + CollectionMeta.KeepVersions + 4)
+      c.dropBranch("flood")
     }
-    assert(spark.read.format("hadro").load(path).count() == 7,
-      "main head manifest must survive branch-version inflation")
-    assert(c.version > 0, "main line must not reset to the empty manifest")
-    // and the staged line is intact too
-    assert(spark.read.format("hadro")
-      .option("hadro.versionAsOf", "flood").load(path).count() ==
-      7 + CollectionMeta.KeepVersions + 4)
-    c.dropBranch("flood")
   }
 
   test("concurrent ref mutations never lose a pin (tags vs branch moves)") {

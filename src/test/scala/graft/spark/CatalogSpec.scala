@@ -504,6 +504,22 @@ class CatalogSpec extends SparkSuite {
     assert(orphans.toSeq == Seq("data-99999-0-deadbeef.data"),
       s"expected only the crash leftover, got ${orphans.mkString(",")}")
 
+    // an unreadable dead-list hides which files the deferred GC owns:
+    // listing must refuse loudly and removal must delete nothing
+    def files = graft.meta.CollectionMeta.listDir(dir).map(_.getFileName.toString).toSet
+    val torn = dir.resolve("_hadro").resolve("dead-1.json")
+    java.nio.file.Files.write(torn, """["data-""".getBytes)
+    val before = files
+    Seq("orphan_files", "remove_orphans").foreach { verb =>
+      val e = intercept[Exception](
+        spark.sql(s"CALL testcat.system.$verb('db.orph')").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("dead-1.json")), s"$verb: ${msgs.mkString(" | ")}")
+    }
+    assert(files == before, "remove_orphans deleted files behind an unreadable dead-list")
+    java.nio.file.Files.delete(torn)
+
     assert(spark.sql("CALL testcat.system.remove_orphans('db.orph')")
       .head.getInt(0) == 1)
     assert(!java.nio.file.Files.exists(dir.resolve("data-99999-0-deadbeef.data")))

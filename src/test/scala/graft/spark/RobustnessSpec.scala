@@ -193,7 +193,99 @@ class RobustnessSpec extends SparkSuite {
     Files.delete(meta.resolve("constraints.json"))
     src.limit(1).write.format("hadro").mode("append").save(path)
     assert(c.scan().count() == src.count() + 1)
+
+    // the other fail-loudly slots: reading them as absent would guess,
+    // and a raw parser error would not say which file is broken
+    val dir = java.nio.file.Paths.get(path)
+    Seq[(String, () => Any)](
+      "consumers.json" -> (() => CollectionMeta.readConsumers(dir)),
+      "branches.json" -> (() => CollectionMeta.readBranches(dir)),
+      "ivf-centroids.json" -> (() => graft.ops.SimilarityOps.loadCentroids(dir))
+    ).foreach { case (f, read) =>
+      Files.write(meta.resolve(f), "not json{".getBytes)
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(f), e.getMessage)
+      Files.delete(meta.resolve(f))
+    }
   }
+
+  test("metadata slot files keep their bytes: earlier files decode to " +
+      "equal values and today's writers reproduce them") {
+    import graft.ops.{SimilarityOps, TextOps}
+    val dir = Files.createTempDirectory("golden_slots").resolve("c")
+    val meta = CollectionMeta.metaDir(dir)
+    val schema = StructType(Seq(StructField("k", LongType, nullable = false),
+      StructField("v", StringType)))
+    val schemaMeta = CollectionMeta.SchemaMeta(schema, Some("k"), Some("k"),
+      Some(4), Some("zstd"), Some("v"), Some("identity"), Seq("days"))
+    // (file, bytes as the earlier per-module writers wrote them, value, reader)
+    val golden = Seq[(String, String, Any, () => Any)](
+      ("schema.json", GoldenSchemaJson, schemaMeta,
+        () => CollectionMeta.readSchema(dir).get),
+      ("writeorder.json", """{"sortedBy":"v"}""", Some("v"),
+        () => CollectionMeta.readWriteOrder(dir)),
+      ("constraints.json", """{"c1":"k >= 0","c2":"v IS NOT NULL"}""",
+        Map("c1" -> "k >= 0", "c2" -> "v IS NOT NULL"),
+        () => CollectionMeta.readConstraints(dir)),
+      ("refs.json", """{"t1":1,"b":1}""", Map("t1" -> 1L, "b" -> 1L),
+        () => CollectionMeta.readRefs(dir)),
+      ("branches.json", """{"b":1}""", Map("b" -> 1L),
+        () => CollectionMeta.readBranches(dir)),
+      ("consumers.json", """{"cur":"/x/state"}""", Map("cur" -> "/x/state"),
+        () => CollectionMeta.readConsumers(dir)),
+      ("clone-origin.json", """{"source":"/x/src","version":3}""",
+        Some(("/x/src", 3L)), () => CollectionMeta.readCloneOrigin(dir)),
+      ("vocab.json", """["a","bc"]""", Some(Seq("a", "bc")),
+        () => TextOps.loadVocab(dir)),
+      ("ivf-centroids.json", """[{"cid":0,"vec":[0.5,-1.25]},{"cid":1,"vec":[2.0,1.0E-4]}]""",
+        Some(Seq((0, Seq(0.5f, -1.25f)), (1, Seq(2.0f, 1.0e-4f)))),
+        () => SimilarityOps.loadCentroids(dir)),
+      ("pq-codebook.json", "[[[0.5,1.0],[2.0,3.0]],[[-1.0,0.25],[4.0,8.0]]]",
+        Some(Seq(Seq(Seq(0.5f, 1.0f), Seq(2.0f, 3.0f)),
+          Seq(Seq(-1.0f, 0.25f), Seq(4.0f, 8.0f)))),
+        () => SimilarityOps.loadCodebook(dir)),
+      ("sq8-params.json", """{"minv":-1.5,"scale":0.01}""", Some((-1.5, 0.01)),
+        () => SimilarityOps.loadSqParams(dir)),
+      ("dead-1.json", """["x.data","x.bloom"]""", Set("x.data", "x.bloom"),
+        () => CollectionMeta.deadListed(dir)),
+      // a plain collection's schema: every optional field absent
+      ("schema.json", s"""{"sparkSchema":$GoldenStructJson,"priorPartitionTransforms":[]}""",
+        CollectionMeta.SchemaMeta(schema, None),
+        () => CollectionMeta.readSchema(dir).get))
+    Files.createDirectories(meta)
+    golden.foreach { case (f, bytes, value, read) =>
+      Files.write(meta.resolve(f), bytes.getBytes("UTF-8"))
+      assert(read() == value, f)
+      Files.delete(meta.resolve(f))
+    }
+    // the writers reachable without training an index
+    CollectionMeta.writeSchema(dir, schemaMeta.schema, schemaMeta.keyField,
+      schemaMeta.bucketBy, schemaMeta.numBuckets, schemaMeta.compress,
+      schemaMeta.partitionBy, schemaMeta.partitionTransform,
+      schemaMeta.priorPartitionTransforms)
+    CollectionMeta.writeWriteOrder(dir, Some("v"))
+    CollectionMeta.writeConstraints(dir,
+      Map("c1" -> "k >= 0", "c2" -> "v IS NOT NULL"))
+    CollectionMeta.commit(dir, _.copy(segments = Nil))
+    CollectionMeta.setRef(dir, "t1", 1L)
+    CollectionMeta.createBranch(dir, "b", 1L)
+    CollectionMeta.registerConsumer(dir, "cur", "/x/state")
+    CollectionMeta.writeCloneOrigin(dir, java.nio.file.Paths.get("/x/src"), 3L)
+    TextOps.saveVocab(dir, Seq("a", "bc"))
+    golden.take(8).foreach { case (f, bytes, _, _) =>
+      assert(new String(Files.readAllBytes(meta.resolve(f)), "UTF-8") == bytes, f)
+    }
+  }
+
+  private val GoldenStructJson = """{"type":"struct","fields":[""" +
+    """{"name":"k","type":"long","nullable":false,"metadata":{}},""" +
+    """{"name":"v","type":"string","nullable":true,"metadata":{}}]}"""
+  /** schema.json as written for the golden check's SchemaMeta (json4s
+    * renders the 8-entry map in hash order). */
+  private val GoldenSchemaJson = s"""{"sparkSchema":$GoldenStructJson,""" +
+    """"partitionTransform":"identity","partitionBy":"v","keyField":"k",""" +
+    """"compress":"zstd","numBuckets":4,"bucketBy":"k",""" +
+    """"priorPartitionTransforms":["days"]}"""
 
   test("torn writes are invisible: only manifest-committed segments are scanned") {
     val path = Files.createTempDirectory("torn").resolve("c").toString
