@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.meta.CollectionMeta
+import graft.meta.{CollectionMeta, CommitConflictException}
 import graft.spark.HadroTable
 
 /** User-facing handle on a hadro collection, implementing the reference's
@@ -912,31 +912,11 @@ final class Collection private (spark: SparkSession, val path: String) {
     val targets =
       if (tags.nonEmpty) byTag.view.filterKeys(tags.contains).toMap
       else byTag.filter(_._2.size >= 2)
-    var committed = 0
-    targets.toSeq.sortBy(_._1).foreach { case (_, segs) =>
-      val files = segs.map(_.file).mkString(",")
-      val gen = manifest.generation
-      val packed = spark.read.format("hadro")
-        .option("hadro.files", files).load(path)
-        .repartition(1)
-      val w = packed.write.format("hadro").mode("append")
-        .option("hadro.replaceFiles", files)
-        .option("hadro.replaceGen", gen.toString)
-        .option("hadro.rewrite", "true")
-        // the up-front !mutated check is only a fast fail: a FIRST
-        // concurrent upsert flips `mutated` without a generation bump,
-        // so the atomic guard must live inside the replace commit
-        .option("hadro.replaceIfUnmutated", "true")
-        .option("hadro.replaceDv",
-          segs.map(s => s"${s.file}=${s.deleteVector.getOrElse("")}").mkString(","))
-      try { w.save(path); committed += 1 }
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("conflicted") =>
-          return committed
-      }
-    }
-    committed
+    // the up-front !mutated check is only a fast fail: a FIRST concurrent
+    // upsert flips `mutated` without a generation bump, so the atomic
+    // guard must live inside the replace commit
+    targets.toSeq.sortBy(_._1).map(_._2).iterator
+      .takeWhile(replaceSegments(m0, _, requireUnmutated = true)).size
   }
 
   /** Reclaim space on demand: physically delete the files recorded dead by
@@ -1382,7 +1362,8 @@ final class Collection private (spark: SparkSession, val path: String) {
     * layout a single-column sort can't give. Same atomicity/GC path as
     * [[compact]] (manifest swap, deferred physical GC). */
   def cluster(cols: Seq[String], numSegments: Int = 16,
-      lex: Boolean = false): Unit = withConflictRetry {
+      lex: Boolean = false): Unit =
+    CommitConflictException.retrying(s"hadro: cluster of $path") { _ =>
     val schema = CollectionMeta.readSchema(dir).get.schema
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"cluster column '$c' not in ${schema.simpleString}"))
@@ -1420,41 +1401,17 @@ final class Collection private (spark: SparkSession, val path: String) {
     w.save(path)
   }
 
-  /** Bounded auto-retry for maintenance rewrites whose pinned snapshot a
-    * concurrent commit invalidated (truncate, overwrite, dv delete): the
-    * body re-reads the manifest each attempt, so retrying IS re-planning.
-    * After `attempts` consecutive conflicts the last error propagates —
-    * livelock beats silent data movement, and five lost races in a row
-    * means something is hammering the collection anyway. */
-  private def withConflictRetry[A](body: => A, attempts: Int = 5): A = {
-    var n = 0
-    while (true) {
-      try return body
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("conflicted") =>
-          n += 1
-          if (n >= attempts) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
-
   /** Rewrite the collection to only live, resolved rows (#23) — the
     * compaction/merge the reference names as a needed maintenance job but
     * never builds (`hadro/engine.py:53`). Atomic: readers see the old
-    * manifest until the rewrite commits. */
-  /** [[compact]] with a target segment size: writer-side rotation caps
-    * every rewritten segment at ~`targetSegmentBytes`, so one compaction
-    * both drops dead rows AND normalizes the file-size distribution (the
-    * OPTIMIZE target-file-size knob). 0 = no cap. */
-  def compact(targetSegmentBytes: Long): Unit = {
-    compactWith(targetSegmentBytes)
-  }
-
-  def compact(): Unit = compactWith(0L)
-
-  private def compactWith(targetSegmentBytes: Long): Unit = withConflictRetry {
+    * manifest until the rewrite commits. `targetSegmentBytes` > 0 makes
+    * writer-side rotation cap every rewritten segment at about that size,
+    * so one compaction both drops dead rows AND normalizes the file-size
+    * distribution (the OPTIMIZE target-file-size knob); 0 = no cap. A
+    * concurrent commit that invalidates the pinned snapshot re-plans it
+    * ([[graft.meta.CommitConflictException.retrying]]). */
+  def compact(targetSegmentBytes: Long = 0L): Unit =
+    CommitConflictException.retrying(s"hadro: compaction of $path") { _ =>
     // No dataset-sized cache: segments are immutable and the read plan is
     // pinned to manifest version v0, so write tasks stream resolved rows
     // from the OLD segment files into fresh ones; the manifest swap +
@@ -1568,7 +1525,8 @@ final class Collection private (spark: SparkSession, val path: String) {
     * included, sorted by `_hadro_seq`), so last-write-wins resolution is
     * byte-identical before and after. Contiguity is what makes the order
     * proof local: a bin re-inserts at its own manifest position, so no
-    * record crosses another segment's position.
+    * record crosses another segment's position. A pure-append bin is
+    * re-sorted on the declared `sortedBy`, so the declaration survives.
     *
     * Returns the number of bins rewritten. Only bins of >= 2 segments are
     * worth a commit; a collection with nothing to pack returns 0 and
@@ -1604,60 +1562,7 @@ final class Collection private (spark: SparkSession, val path: String) {
       } else flush() // a big segment breaks the contiguous run
     }
     flush()
-    if (bins.isEmpty) return 0
-
-    // logical columns only: dropped physical slots are invisible to scans
-    // (the rewrite's write path re-null-fills them)
-    val storedCols = CollectionMeta.logicalSchema(
-      CollectionMeta.readSchema(dir).get.schema).fieldNames.toSeq
-    var committed = 0
-    bins.foreach { bin =>
-      val files = bin.map(_.file).mkString(",")
-      // our own earlier bins bumped the generation; pin the CURRENT one —
-      // a conflicting external commit still aborts the replace cleanly
-      val gen = manifest.generation
-      val packed =
-        if (m0.mutated) {
-          // tombstones shadow keys in OLDER segments: they must survive the
-          // pack, in sequence order — the changefeed view carries both
-          spark.read.format("hadro")
-            .option("hadro.changefeed", "full")
-            .option("hadro.files", files)
-            .load(path)
-            .repartition(1)
-            .sortWithinPartitions(col(HadroTable.SeqCol))
-            .select(storedCols.map(col) :+
-              col(HadroTable.DeletedCol).as("__hadro_delete"): _*)
-        } else {
-          spark.read.format("hadro").option("hadro.files", files).load(path)
-            .repartition(1)
-        }
-      var w = packed.write.format("hadro").mode("append")
-        .option("hadro.replaceFiles", files)
-        .option("hadro.replaceGen", gen.toString)
-        .option("hadro.rewrite", "true")
-        // bin-time dv state: a concurrent dv DELETE on a binned segment
-        // conflicts (stop-and-report) instead of losing its deletions
-        .option("hadro.replaceDv",
-          bin.map(s => s"${s.file}=${s.deleteVector.getOrElse("")}").mkString(","))
-      if (m0.mutated) w = w.option("hadro.deleteCol", "__hadro_delete")
-      (m0.bucketBy, m0.numBuckets) match {
-        case (Some(c), Some(n)) =>
-          w = w.option("hadro.bucketBy", c).option("hadro.buckets", n.toString)
-        case _ => ()
-      }
-      // Partial progress is safe progress: each bin is its own atomic
-      // replace commit, so a conflict on bin i+1 does not undo bins 0..i.
-      // Stop (the conflicting writer may have replaced the very segments
-      // later bins reference) and report what actually landed.
-      try { w.save(path); committed += 1 }
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("conflicted") =>
-          return committed
-      }
-    }
-    committed
+    bins.iterator.takeWhile(replaceSegments(m0, _)).size
   }
 
   /** Materialize deletion vectors: rewrite ONLY the segments whose
@@ -1693,57 +1598,63 @@ final class Collection private (spark: SparkSession, val path: String) {
     val m0 = manifest
     val targets = m0.segments.filter(s => s.deleteVector.isDefined &&
       s.dvDeletes.toDouble / math.max(1L, s.rows) >= minFraction)
-    if (targets.isEmpty) return 0
-    // logical columns only: dropped physical slots are invisible to scans
-    // (the rewrite's write path re-null-fills them)
-    val storedCols = CollectionMeta.logicalSchema(
-      CollectionMeta.readSchema(dir).get.schema).fieldNames.toSeq
-    var committed = 0
-    targets.foreach { seg =>
-      // earlier purges bumped the generation; pin the CURRENT one — a
-      // conflicting external commit still aborts the replace cleanly
-      val gen = manifest.generation
-      val survivors =
-        if (m0.mutated) {
-          // tombstones shadow keys in OLDER segments: they must survive
-          // the purge, in sequence order — the changefeed view carries
-          // both; the reader drops DV'd rows unconditionally, so the
-          // surviving rows are exactly the segment minus its vector
-          spark.read.format("hadro")
-            .option("hadro.changefeed", "full")
-            .option("hadro.files", seg.file)
-            .load(path)
-            .repartition(1)
-            .sortWithinPartitions(col(HadroTable.SeqCol))
-            .select(storedCols.map(col) :+
-              col(HadroTable.DeletedCol).as("__hadro_delete"): _*)
-        } else {
-          val base = spark.read.format("hadro")
-            .option("hadro.files", seg.file).load(path).repartition(1)
-          m0.sortedBy.fold(base)(sc => base.sortWithinPartitions(col(sc)))
-        }
-      var w = survivors.write.format("hadro").mode("append")
-        .option("hadro.replaceFiles", seg.file)
-        .option("hadro.replaceGen", gen.toString)
-        .option("hadro.rewrite", "true")
-        // plan-time dv pin: a concurrent DV delete on this segment
-        // conflicts (stop-and-report) instead of losing its deletions
-        .option("hadro.replaceDv", s"${seg.file}=${seg.deleteVector.get}")
-      if (m0.mutated) w = w.option("hadro.deleteCol", "__hadro_delete")
-      else m0.sortedBy.foreach(sc => w = w.option("hadro.sortedBy", sc))
-      (m0.bucketBy, m0.numBuckets) match {
-        case (Some(c), Some(n)) =>
-          w = w.option("hadro.bucketBy", c).option("hadro.buckets", n.toString)
-        case _ => ()
+    targets.iterator.takeWhile(seg => replaceSegments(m0, Seq(seg))).size
+  }
+
+  /** The one segment rewrite behind [[compactSmall]], [[purgeDeletes]] and
+    * [[compactPartitions]]: rewrite one `group` of segments through the
+    * atomic replace commit (`hadro.replaceFiles`) and say whether it
+    * committed. Untouched segments are carried by reference, and the group
+    * re-inserts at its own manifest position. `m0` is the manifest the
+    * groups were planned against:
+    *   - mutated: the changefeed view in `_hadro_seq` order, so tombstones
+    *     (which shadow keys in OLDER segments) survive and last-write-wins
+    *     resolution is identical before and after;
+    *   - otherwise: the plain rows, re-sorted on the declared `sortedBy`
+    *     and declaring it again, or the commit would clear it;
+    *   - the recorded bucket spec recomputes bucket tags either way, and
+    *     the reader drops dv'd rows, so a vectored segment loses exactly
+    *     its vector.
+    * Each group pins the CURRENT generation (earlier groups bumped it) and
+    * its plan-time (file, dv) pairs, so a concurrent truncate, rewrite or
+    * dv delete conflicts instead of losing its work. `requireUnmutated`
+    * also refuses the commit once a first upsert has landed. The verbs
+    * stop at the first conflict, since the conflicting writer may have
+    * replaced the very segments later groups reference (the
+    * [[compactSmall]] contract: earlier groups stay committed). */
+  private def replaceSegments(m0: graft.meta.Manifest,
+      group: Seq[graft.meta.SegmentInfo], requireUnmutated: Boolean = false): Boolean = {
+    val files = group.map(_.file).mkString(",")
+    val read = spark.read.format("hadro").option("hadro.files", files)
+    val sortCol = if (m0.mutated) None else m0.sortedBy
+    val rows =
+      if (m0.mutated) {
+        // logical columns only: dropped physical slots are invisible to
+        // scans (the rewrite's write path re-null-fills them)
+        val storedCols = CollectionMeta.logicalSchema(
+          CollectionMeta.readSchema(dir).get.schema).fieldNames.toSeq
+        read.option("hadro.changefeed", "full").load(path)
+          .repartition(1)
+          .sortWithinPartitions(col(HadroTable.SeqCol))
+          .select(storedCols.map(col) :+
+            col(HadroTable.DeletedCol).as("__hadro_delete"): _*)
+      } else {
+        val base = read.load(path).repartition(1)
+        sortCol.fold(base)(sc => base.sortWithinPartitions(col(sc)))
       }
-      try { w.save(path); committed += 1 }
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("conflicted") =>
-          return committed
-      }
-    }
-    committed
+    var w = rows.write.format("hadro").mode("append")
+      .option("hadro.replaceFiles", files)
+      .option("hadro.replaceGen", manifest.generation.toString)
+      .option("hadro.rewrite", "true")
+      .option("hadro.replaceDv",
+        group.map(s => s"${s.file}=${s.deleteVector.getOrElse("")}").mkString(","))
+    if (m0.mutated) w = w.option("hadro.deleteCol", "__hadro_delete")
+    sortCol.foreach(sc => w = w.option("hadro.sortedBy", sc))
+    for (c <- m0.bucketBy; n <- m0.numBuckets)
+      w = w.option("hadro.bucketBy", c).option("hadro.buckets", n.toString)
+    if (requireUnmutated) w = w.option("hadro.replaceIfUnmutated", "true")
+    try { w.save(path); true }
+    catch { case e: Exception if CommitConflictException.isConflict(e) => false }
   }
 }
 

@@ -22,8 +22,8 @@ object MultimodalOps {
   // in-memory image round-trips through a temp file on local disk. All
   // media here lives in byte arrays, so switch the JVM to the in-memory
   // cache — identical bytes decoded/encoded, zero per-row disk I/O.
-  // Exposed as an explicit idempotent entry point (a volatile boolean
-  // write when already set) so any codepath that reaches ImageIO WITHOUT
+  // Exposed as an explicit idempotent entry point (only a read of the
+  // setting when already off) so any codepath that reaches ImageIO WITHOUT
   // touching this object — e.g. a fixture generator's serialized lambda
   // on a remote executor — can force it provably before first use; the
   // object initializer below covers every MultimodalOps method itself.
@@ -31,7 +31,7 @@ object MultimodalOps {
   // never decodes through files, so the in-memory cache is strictly
   // better for every ImageIO user it hosts.
   private[graft] def ensureInMemoryImageIO(): Unit =
-    javax.imageio.ImageIO.setUseCache(false)
+    if (javax.imageio.ImageIO.getUseCache) javax.imageio.ImageIO.setUseCache(false)
   ensureInMemoryImageIO()
 
   /** Cheap magic-byte sniff: only bytes that claim to be a decodable image

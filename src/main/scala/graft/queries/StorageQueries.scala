@@ -1361,11 +1361,11 @@ object StorageQueries {
         s.sql("INSERT INTO graft_h49.db.suppliers SELECT * FROM h49_src")
         val good = graft.api.Collection(s, s"$wh/db/suppliers").version
         // damage round 1: a bad append; round 2: a destructive delete.
-        // The delete runs MERGE-ON-READ (deletion vectors) — a CoW delete
-        // is a partial rewrite whose commit GCs pre-rewrite manifests, so
-        // there would be nothing left to restore; dv deletes are
-        // metadata-only and keep history intact. Rolling back then proves
-        // the restored head drops the later DV sidecar reference, exactly
+        // The delete runs MERGE-ON-READ (deletion vectors), which is
+        // metadata-only. A CoW delete would be restorable too: its partial
+        // replace commit keeps every retained manifest and defers the
+        // replaced files one generation. Rolling back here proves the
+        // restored head drops the later DV sidecar reference, exactly
         // resurrecting the vectored rows.
         s.sql("""INSERT INTO graft_h49.db.suppliers
           SELECT s_suppkey + 9000000, s_name, -1.0 FROM h49_src""")

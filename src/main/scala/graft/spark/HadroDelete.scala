@@ -10,7 +10,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 
-import graft.meta.CollectionMeta
+import graft.meta.{CollectionMeta, CommitConflictException}
 
 /** SQL row-level DELETE (`DELETE FROM hadro_catalog.db.t WHERE ...`) — the
   * reference's declared delete contract (`/root/reference/INTERFACE.md:15-17`)
@@ -171,21 +171,10 @@ object HadroDeleteSupport {
         // manifest and re-run the whole statement (idempotent: rows
         // already deleted by the competing commit cannot re-match).
         val useDv = mode.equalsIgnoreCase("dv")
-        var attempt = 0
-        var done = false
-        while (!done) {
+        CommitConflictException.retrying(s"hadro: DELETE on $path") { attempt =>
           val m = if (attempt == 0) m0 else CollectionMeta.currentManifest(path)
-          try {
-            if (useDv) deleteVectors(spark, path, cond, m)
-            else deleteCopyOnWrite(spark, path, filters, cond, m, meta)
-            done = true
-          } catch {
-            case e: Exception if isRetryableConflict(e) =>
-              attempt += 1
-              if (attempt >= 5) throw new IllegalStateException(
-                s"hadro: DELETE on $path kept conflicting after $attempt " +
-                  "attempts — giving up", e)
-          }
+          if (useDv) deleteVectors(spark, path, cond, m)
+          else deleteCopyOnWrite(spark, path, filters, cond, m, meta)
         }
     }
   }
@@ -200,50 +189,11 @@ object HadroDeleteSupport {
     * Same bounded conflict-retry discipline as the SQL statement path.
     * NOT the SQL DELETE semantics for keyed tables (that stays
     * tombstone merge-on-read via [[deleteWhere]]). */
-  private[graft] def dvDeleteWhere(path: Path, cond: Column): Unit = {
-    val spark = SparkSession.active
-    var attempt = 0
-    var done = false
-    while (!done) {
+  private[graft] def dvDeleteWhere(path: Path, cond: Column): Unit =
+    CommitConflictException.retrying(s"hadro: dv delete on $path") { _ =>
       val m = CollectionMeta.currentManifest(path)
-      if (m.segments.isEmpty) return
-      try { deleteVectors(spark, path, cond, m); done = true }
-      catch {
-        case e: Exception if isRetryableConflict(e) =>
-          attempt += 1
-          if (attempt >= 5) throw new IllegalStateException(
-            s"hadro: dv delete on $path kept conflicting after $attempt " +
-              "attempts — giving up", e)
-      }
+      if (m.segments.nonEmpty) deleteVectors(SparkSession.active, path, cond, m)
     }
-  }
-
-  /** A manifest commit declined because a concurrent commit invalidated
-    * the snapshot this operation planned against. Always safe to retry
-    * from a fresh manifest. */
-  private[spark] final class HadroConflictException(msg: String)
-      extends RuntimeException(msg)
-
-  /** True for errors that mean "the snapshot moved; re-plan and re-run":
-    * our own [[HadroConflictException]] and the replace-commit's
-    * "...conflicted..." IllegalStateException (also when Spark wraps
-    * either inside a job/write failure). */
-  private[spark] def isRetryableConflict(e: Throwable): Boolean = {
-    var t: Throwable = e
-    var depth = 0
-    while (t != null && depth < 8) {
-      t match {
-        case _: HadroConflictException => return true
-        case ise: IllegalStateException
-            if ise.getMessage != null && ise.getMessage.contains("conflicted") =>
-          return true
-        case _ => ()
-      }
-      t = t.getCause
-      depth += 1
-    }
-    false
-  }
 
   /** Keyed delete: append one tombstone per key whose latest live version
     * matches — a single write job, a single manifest commit. */
@@ -325,7 +275,7 @@ object HadroDeleteSupport {
     * view (time travel). Any concurrent conflicting commit — truncate,
     * compaction, segment rewrite, or ANOTHER deletion-vector commit whose
     * union this attempt did not build on — aborts with
-    * [[HadroConflictException]]; the statement-level loop in
+    * [[CommitConflictException]]; the statement-level loop in
     * [[deleteWhere]] then re-plans against the fresh manifest and retries
     * (bounded), so concurrent dv deletes serialize instead of silently
     * resurrecting each other's rows. */
@@ -369,7 +319,7 @@ object HadroDeleteSupport {
         try java.nio.file.Files.deleteIfExists(path.resolve(name))
         catch { case _: Exception => () }
       }
-      throw new HadroConflictException(msg)
+      throw new CommitConflictException(msg)
     }
     CollectionMeta.commit(path, cur => {
       if (cur.generation != m0.generation) conflict(

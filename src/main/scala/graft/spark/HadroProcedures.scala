@@ -126,7 +126,7 @@ object HadroProcedures {
         new StructType().add("version", LongType)) { in =>
           val c = coll(in)
           val target = if (in.isNullAt(1)) 0L else in.getLong(1)
-          if (target > 0) c.compact(target) else c.compact()
+          c.compact(target)
           Seq(InternalRow(c.version))
         }
       case "purge_deletes" => proc("purge_deletes",

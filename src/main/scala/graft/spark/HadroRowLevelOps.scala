@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.format.SegmentWriter
-import graft.meta.{CollectionMeta, SegmentInfo}
+import graft.meta.{CollectionMeta, CommitConflictException, SegmentInfo}
 
 /** SQL `UPDATE` / `MERGE INTO` (and complex `DELETE`) for hadro tables via
   * DSv2 row-level operations ([[HadroTable]] implements
@@ -462,7 +462,7 @@ final class HadroDvDeltaWrite(path: Path, info: LogicalWriteInfo,
         written.foreach(n =>
           try Files.deleteIfExists(path.resolve(n)) catch { case _: Exception => () })
         abort(messages)
-        throw new HadroDeleteSupport.HadroConflictException(msg)
+        throw new CommitConflictException(msg)
       }
       // fold the pinned pre-existing vector into each union and persist
       val buildId = java.lang.Long.toHexString(System.nanoTime())

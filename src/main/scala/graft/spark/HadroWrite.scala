@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
 import graft.format.{Consistency, SegmentWriter}
-import graft.meta.{CollectionMeta, SegmentInfo}
+import graft.meta.{CollectionMeta, CommitConflictException, SegmentInfo}
 
 /** Write-side options (all prefixed `hadro.`):
   *   - `consistency`: relaxed | aggressive — fsync cadence, mirroring
@@ -1073,14 +1073,14 @@ final class HadroBatchWrite(path: Path, schema: StructType,
     if (conflicted) {
       if (replaceSpec.isDefined) {
         abort(messages) // clean up the orphaned new segment files
-        throw new IllegalStateException(
+        throw new CommitConflictException(
           s"hadro: partial rewrite of $path conflicted with a concurrent " +
             "truncate/compaction/rewrite — the replace was abandoned; " +
             "re-plan against the current manifest and retry")
       }
       if (dynamicPin.isDefined) {
         abort(messages) // clean up the orphaned new segment files
-        throw new IllegalStateException(
+        throw new CommitConflictException(
           s"hadro: dynamic partition overwrite of $path conflicted — a " +
             "concurrent commit changed a partition this write replaces " +
             "(its rows would be dropped with the old files); the " +
@@ -1089,14 +1089,14 @@ final class HadroBatchWrite(path: Path, schema: StructType,
       if (replaceWherePin.isDefined) {
         abort(messages) // clean up the orphaned new segment files
         cleanupRwVectors()
-        throw new IllegalStateException(
+        throw new CommitConflictException(
           s"hadro: REPLACE WHERE on $path conflicted — a concurrent " +
             "commit changed the replaced region (rows would be dropped " +
             "with the old files, or a segment now straddles the " +
             "boundary); the overwrite was abandoned, re-run against the " +
             "current state")
       }
-      throw new IllegalStateException(
+      throw new CommitConflictException(
         s"hadro: compaction of $path conflicted with a concurrent " +
           "truncate/overwrite — the rewrite was abandoned; retry if still needed")
     }

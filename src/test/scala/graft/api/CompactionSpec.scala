@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.meta.CollectionMeta
+import graft.meta.{CollectionMeta, CommitConflictException}
 
 /** Compaction under concurrency and across time travel:
   *   - a reader mid-scan when compact() commits must finish correctly
@@ -256,6 +256,29 @@ class CompactionSpec extends SparkSuite {
     // nothing to do the second time: no commit at all
     assert(c.compactSmall(4000L) == 0)
     assert(CollectionMeta.currentManifest(Paths.get(path)).version == m1.version)
+
+    // a declared sort survives the pack: the bin is re-sorted and declares
+    // it again (a replace commit that does not re-declare it clears it)
+    val sortedPath = tmp("small_sorted")
+    (0 until 4).foreach { i =>
+      // descending key ranges: the segments concatenated are NOT sorted
+      spark.range((3 - i) * 10L, (4 - i) * 10L).toDF("k")
+        .withColumn("v", $"k" * 2).coalesce(1).sortWithinPartitions("k")
+        .write.format("hadro").mode("append").option("hadro.sortedBy", "k")
+        .save(sortedPath)
+    }
+    val sc = Collection(spark, sortedPath)
+    assert(CollectionMeta.currentManifest(Paths.get(sortedPath)).sortedBy.contains("k"))
+    assert(sc.compactSmall(minBytes = 1L << 20) == 1)
+    val ms = CollectionMeta.currentManifest(Paths.get(sortedPath))
+    assert(ms.sortedBy.contains("k"), "compactSmall dropped the declared sort")
+    assert(ms.segments.size == 1)
+    ms.segments.foreach { s =>
+      val keys = spark.read.format("hadro").option("hadro.files", s.file)
+        .load(sortedPath).select($"k").as[Long].collect().toSeq
+      assert(keys == keys.sorted, s"segment ${s.file} out of order: $keys")
+    }
+    assert(sc.scan().count() == 40)
   }
 
   test("compactSmall preserves LWW order and tombstones on a mutated collection") {
@@ -320,7 +343,7 @@ class CompactionSpec extends SparkSuite {
     assert(CollectionMeta.currentManifest(Paths.get(path)).mutated)
     val packed = spark.read.format("hadro")
       .option("hadro.files", files.mkString(",")).load(path).repartition(1)
-    val e = intercept[IllegalStateException] {
+    val e = intercept[CommitConflictException] {
       packed.write.format("hadro").mode("append")
         .option("hadro.replaceFiles", files.mkString(","))
         .option("hadro.replaceGen", m0.generation.toString)

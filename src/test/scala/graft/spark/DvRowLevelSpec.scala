@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.api.Collection
-import graft.meta.CollectionMeta
+import graft.meta.{CollectionMeta, CommitConflictException}
 
 /** Merge-on-read row-level ops via the deletion-vector DELTA operation
   * (non-keyed collections, `spark.hadro.{delete,update,merge}.mode=dv`):
@@ -179,7 +179,7 @@ class DvRowLevelSpec extends SparkSuite {
     val outcomes = withMode("delete") {
       val deletes = (0 until 4).map { k => Future {
         try { spark.sql(s"DELETE FROM dvrlo8.db.t WHERE id % 4 = $k"); (k, true) }
-        catch { case e: Exception if HadroDeleteSupport.isRetryableConflict(e) => (k, false) }
+        catch { case e: Exception if CommitConflictException.isConflict(e) => (k, false) }
       }}
       val compactor = Future {
         try graft.api.Collection(spark, dir.toString).compact()

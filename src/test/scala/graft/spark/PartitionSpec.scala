@@ -225,8 +225,24 @@ class PartitionSpec extends SparkSuite {
       .toDF("id", "ts"))
     val e = intercept[Exception](kv.compactPartitions())
     assert(e.getMessage.contains("pure-append"), e.getMessage)
+    // a declared sort survives: each partition is re-sorted and declares
+    // it again (a replace commit that does not re-declare it clears it)
+    spark.sql("""CREATE TABLE pscoped.db.srt (id BIGINT, ts TIMESTAMP)
+      USING hadro PARTITIONED BY (days(ts)) TBLPROPERTIES('sortedBy'='id')""")
+    (0 until 2).foreach(_ => spark.sql("INSERT INTO pscoped.db.srt SELECT * FROM pscoped_src"))
+    val srt = Paths.get(w, "db", "srt")
+    assert(CollectionMeta.currentManifest(srt).sortedBy.contains("id"))
+    assert(Collection(spark, srt.toString).compactPartitions() == 3)
+    val ms = CollectionMeta.currentManifest(srt)
+    assert(ms.sortedBy.contains("id"), "compactPartitions dropped the declared sort")
+    ms.segments.foreach { s =>
+      val ids = spark.read.format("hadro").option("hadro.files", s.file)
+        .load(srt.toString).select($"id").as[Long].collect().toSeq
+      assert(ids == ids.sorted, s"segment ${s.file} out of order: $ids")
+    }
     spark.sql("DROP TABLE pscoped.db.ev")
     spark.sql("DROP TABLE pscoped.db.kv")
+    spark.sql("DROP TABLE pscoped.db.srt")
   }
 
   test("drop_partitions: metadata-only retention, time travel survives, guards hold") {
