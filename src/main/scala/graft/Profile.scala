@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement harness (guide §1: measure first). Runs the named
   * queries once as warmup, once timed, and prints a per-call-site breakdown
@@ -14,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = SparkEntry.localBuilder()
     // A/B experiments: SPARK_GRAFT_PROFILE_CONF="k=v;k2=v2"
     sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";")
       .filter(_.contains("=")).foreach { kv =>

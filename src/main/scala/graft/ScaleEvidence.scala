@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical evidence for the composed loop's core scale claim: the
@@ -16,15 +15,7 @@ import org.apache.spark.sql.functions._
   * the probe's 10× ratio. Results are recorded in BASELINE.md. */
 object ScaleEvidence {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed[T](body: => T): (T, Double) = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Flagship smoke: runs [[SparkEntry.entry]] (the driver's rows>0 check)
   * and exits non-zero on an empty result. Optional args run named
@@ -7,12 +6,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       if (args.length > 1) {

@@ -26,6 +26,21 @@ object SparkEntry {
     spark
   }
 
+  /** The local session the mains (Bench, Verify, Smoke, Plans, Profile,
+    * ScaleEvidence) build: `local[SPARK_GRAFT_CPUS]` (default 32) with as
+    * many shuffle partitions, UTC, AQE and no UI. A main adds its own
+    * confs to the builder and sets its own log level. */
+  def localBuilder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+  }
+
   /** Drop the per-query catalog registrations a lifecycle query leaves in
     * session conf. Each storage query registers a uniquely-named catalog
     * (`spark.sql.catalog.graft_h*` + `.warehouse`); the names never

@@ -95,14 +95,12 @@ final class Collection private (spark: SparkSession, val path: String) {
     require(touched.columns.length == 1,
       s"touched-keys frame must have exactly one column, got " +
         touched.columns.mkString(", "))
-    // localCheckpoint (eager): the caller's touched frame is typically a
-    // changes-window scan — without pinning it here it would run once
-    // for the bounded probe and AGAIN for the semi-join restriction
-    // (blocks are window-sized and ContextCleaner-reclaimed on GC)
+    // the caller's touched frame is typically a changes-window scan:
+    // checkpointed (lazily, see boundedRows) it runs once for both the
+    // bounded probe and the semi-join restriction; literal keys turn
+    // the restriction into scan pushdown
     val keys = touched.select(col(touched.columns.head).as(k)).distinct()
-      .localCheckpoint()
-    // bounded probe (window-proportional input, ≤ MaxKeyPushdown+1 rows
-    // collected): literal keys turn the restriction into scan pushdown
+      .localCheckpoint(eager = false)
     val lits = Collection.boundedKeyLits(keys, Collection.MaxKeyPushdown)
     def restrict(df: DataFrame): DataFrame = lits match {
       case Some(vs) => df.filter(col(k).isin(vs: _*))
@@ -1690,17 +1688,37 @@ object Collection {
     * sets restrict via a semi join below the LWW window instead. */
   private[graft] val MaxKeyPushdown: Int = 1000
 
-  /** The bounded-probe idiom shared by [[Collection.resolvedAsOf]],
-    * [[IncrementalRollup]] and the dedup index probes: collect up to
-    * `max`+1 values of a ONE-COLUMN frame — `Some(values)` when the set
-    * is bounded (callers turn them into IN-predicate scan pushdown; the
-    * seq may contain nulls, null handling stays with the caller),
-    * `None` when it exceeds the bound (callers fall back to a join). */
-  private[graft] def boundedKeyLits(df: org.apache.spark.sql.DataFrame,
-      max: Int): Option[Seq[Any]] = {
-    val lits = df.limit(max + 1).collect().map(_.get(0)).toSeq
-    if (lits.size <= max) Some(lits) else None
+  /** The one bounded driver fetch behind every loop operator's "driver
+    * path within the bound, Spark fallback over it" choice: ONE
+    * `limit(bound + 1)` collect, `Some(rows)` when the frame holds at
+    * most `bound` rows (then they are all of them), `None` over it. The
+    * driver never holds more than `bound + 1` rows, so an oversized
+    * input fails over or refuses instead of OOMing a `collect()`.
+    *
+    * When the over-bound branch reads the SAME frame again (the
+    * distributed fallback), pass `df.localCheckpoint(eager = false)`
+    * here and hand that checkpoint to the fallback: the lazy checkpoint
+    * runs the frame's shuffle stages when it is built, this fetch fills
+    * its blocks, and the fallback reads the blocks — the input runs once
+    * on either path (an over-bound fetch followed by a fresh checkpoint
+    * runs it twice). Take the checkpoint only where the frame ends in a
+    * `distinct`/`groupBy`, which AQE coalesces to one partition at
+    * window sizes: on a multi-partition last stage the checkpoint
+    * computes the partitions the fetch skipped in an extra job. A
+    * map-only frame that is not read again takes no checkpoint. */
+  private[graft] def boundedRows(df: DataFrame,
+      bound: Int): Option[Array[org.apache.spark.sql.Row]] = {
+    val rows = df.limit(bound + 1).collect()
+    if (rows.length <= bound) Some(rows) else None
   }
+
+  /** [[boundedRows]] over a ONE-COLUMN frame, as values: callers turn
+    * them into IN-predicate scan pushdown (the seq may contain nulls,
+    * null handling stays with the caller) or, on `None`, fall back to a
+    * join. */
+  private[graft] def boundedKeyLits(df: DataFrame,
+      max: Int): Option[Seq[Any]] =
+    boundedRows(df, max).map(_.map(_.get(0)).toSeq)
 
   /** The promotions [[Collection.widenColumn]] accepts: every value the
     * old type can hold is exactly representable in the new one. */

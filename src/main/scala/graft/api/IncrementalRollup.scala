@@ -397,9 +397,9 @@ object IncrementalRollup {
       floor: Long, head: Long, groupCol: String,
       aggs: Seq[(String, String, String)]): org.apache.spark.sql.DataFrame = {
     val fact = Collection(spark, factPath)
-    // localCheckpoint (eager): the touched-group frame feeds the bounded
-    // probe, the snapshot restriction AND the refresh join — one window
-    // scan, not three (blocks are window-sized, reclaimed on GC)
+    // checkpointed (lazily, see Collection.boundedRows): the touched-
+    // group frame feeds the bounded probe, the snapshot restriction AND
+    // the refresh join — one window scan, not three
     val touched = (fact.keyField match {
       case Some(_) =>
         ChangeFeed.updateImages(spark, factPath, floor, head)
@@ -409,7 +409,7 @@ object IncrementalRollup {
         .option("hadro.changesStart", floor.toString)
         .option("hadro.changesEnd", head.toString).load(factPath)
         .select(col(groupCol).as("g"))
-    }).distinct().localCheckpoint()
+    }).distinct().localCheckpoint(eager = false)
     val lits = Collection.boundedKeyLits(touched, Collection.MaxKeyPushdown)
     def restrictGroups(df: org.apache.spark.sql.DataFrame) = lits match {
       case Some(vs) =>

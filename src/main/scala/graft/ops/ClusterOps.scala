@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.api.Collection.{MaxKeyPushdown, boundedKeyLits, boundedRows}
 
 /** A [[ClusterOps.componentsUpdate]] window touched more distinct
   * clusters than `maxDriverRoots` — the driver-resident root collect is
@@ -240,13 +241,13 @@ object ClusterOps {
     * discipline): the only driver materializations are the touched-
     * cluster ROOT sets — bounded by |batch docs|, never by corpus or
     * membership size (member lists are collected ONLY on the bounded
-    * fast path, under the explicit [[MaxDriverFoldMembers]] head(n+1)
-    * guard; the distributed fold never collects them). That bound is
-    * a contract, not an accident: a whole-log backfill fed as ONE
-    * window would drive a corpus-scale root collect, so `maxDriverRoots`
-    * fails it loudly with windowing guidance instead of OOMing the
-    * driver — replay a backlog through windows (which is also what
-    * keeps each fold touched-cluster-proportional).
+    * fast path, under [[MaxDriverFoldMembers]]; the distributed fold
+    * never collects them). That bound is a contract, not an accident: a
+    * whole-log backfill fed as ONE window would drive a corpus-scale
+    * root collect, so `maxDriverRoots` fails it loudly with windowing
+    * guidance instead of OOMing the driver — replay a backlog through
+    * windows (which is also what keeps each fold touched-cluster-
+    * proportional).
     *
     * Doc takedowns: [[keepList]]`(live)` drops dead members read-side
     * per query (the d31 pattern), and [[sweepComponents]] physically
@@ -260,23 +261,24 @@ object ClusterOps {
       maxStateFiles: Int = 64): Long =
     DedupOps.withIngestLease(statePath, enabled = true) {
     val p = java.nio.file.Paths.get(statePath)
-    val pairsDf = newPairs
+    // checkpointed lazily (see Collection.boundedRows): both halves read
+    // it, so an over-bound window runs the caller's pipeline once
+    val pairs = newPairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
+      .localCheckpoint(eager = false)
     val exists = graft.meta.CollectionMeta.collectionCommitted(p)
     import spark.implicits._
     // the maxDriverRoots CONTRACT, checked by both halves before any
     // commit (the dedicated type keeps componentsCycle's rebuild
     // delegation working)
-    def requireRootsBound(roots: Int): Unit =
-      if (roots > maxDriverRoots)
-        throw new TouchedRootsOverBoundException(
-          s"hadro: componentsUpdate window touches more than " +
-            s"$maxDriverRoots distinct clusters — the root collect is " +
-            "driver-resident and bounded by |batch docs| by contract; " +
-            "fold a backfill of this size in windows instead of one " +
-            "batch (or componentsRebuild for a full pair log), or " +
-            "raise maxDriverRoots if the driver is sized for it")
+    def rootsOverBound = new TouchedRootsOverBoundException(
+      s"hadro: componentsUpdate window touches more than " +
+        s"$maxDriverRoots distinct clusters — the root collect is " +
+        "driver-resident and bounded by |batch docs| by contract; " +
+        "fold a backfill of this size in windows instead of one " +
+        "batch (or componentsRebuild for a full pair log), or " +
+        "raise maxDriverRoots if the driver is sized for it")
     // One of two halves COMPUTES the window, picked by its size; the one
     // tail below COMMITS it. A half returns the keep changeset (present
     // iff keepPath is: the touched clusters' keep rows plus a
@@ -294,13 +296,11 @@ object ClusterOps {
     // loops' per-window latency floor (guide §2.4). The union-find
     // reproduces connectedComponentsAltStar's contract exactly: cluster
     // label = min reachable id over batch edges ∪ (member → root) star
-    // edges. Member rows are fetched ONLY under an explicit bound
-    // (head(n+1)); anything larger returns None and the distributed
-    // fold — which never collects member lists at all — runs unchanged.
+    // edges. Member rows are fetched ONLY under MaxDriverFoldMembers;
+    // anything larger returns None and the distributed fold — which
+    // never collects member lists at all — runs unchanged.
     def driverFold(): Option[Window] = {
-      val maxPairs = graft.api.Collection.MaxKeyPushdown
-      val pairRows = pairsDf.head(maxPairs + 1)
-      if (pairRows.length > maxPairs) return None
+      val pairRows = boundedRows(pairs, MaxKeyPushdown).getOrElse(return None)
       val edges = pairRows.map(r => (r.getLong(0), r.getLong(1)))
       val batchDocs = edges.iterator
         .flatMap(e => Iterator(e._1, e._2)).toSeq.distinct
@@ -309,22 +309,17 @@ object ClusterOps {
         else {
           val coll = graft.api.Collection(spark, statePath)
           val state = coll.scanVersion(coll.version)
-          val touched = state.filter(col("doc_id").isin(batchDocs: _*))
-            .select(col("cluster")).distinct()
-            .head(batchDocs.size + 1) // distinct roots <= |batch docs|
-          if (touched.length > batchDocs.size) return None // defensive
-          val roots = touched.map(_.getLong(0)).toSeq
+          // distinct roots <= |batch docs|; over it is defensive
+          val roots = boundedRows(state.filter(col("doc_id")
+              .isin(batchDocs: _*)).select(col("cluster")).distinct(),
+            batchDocs.size).getOrElse(return None).map(_.getLong(0)).toSeq
           // the fast path's roots are batch-bounded by construction, but
           // a caller-lowered bound must still refuse
-          requireRootsBound(roots.size)
+          if (roots.size > maxDriverRoots) throw rootsOverBound
           if (roots.isEmpty) Array.empty
-          else {
-            val memb = state.filter(col("cluster").isin(roots: _*))
-              .select(col("doc_id"), col("cluster"))
-              .head(MaxDriverFoldMembers + 1)
-            if (memb.length > MaxDriverFoldMembers) return None
-            memb.map(r => (r.getLong(0), r.getLong(1)))
-          }
+          else boundedRows(state.filter(col("cluster").isin(roots: _*))
+              .select(col("doc_id"), col("cluster")), MaxDriverFoldMembers)
+            .getOrElse(return None).map(r => (r.getLong(0), r.getLong(1)))
         }
       // union-find, min-label roots: cluster = min reachable id
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -369,7 +364,6 @@ object ClusterOps {
         toAppend.toSeq.toDF("doc_id", "cluster"), toAppend.length.toLong))
     }
     def distributedFold(): Window = {
-      val pairs = pairsDf.localCheckpoint()
       val batchDocs = pairs.select(col("a").as("doc_id"))
         .unionByName(pairs.select(col("b").as("doc_id"))).distinct()
       // current rows of every touched cluster (pinned version)
@@ -384,14 +378,12 @@ object ClusterOps {
           // would OOM the driver inside an explicit broadcast() BEFORE
           // the roots bound below could fire — AQE still auto-broadcasts
           // genuinely small over-1000-doc batches from runtime stats
-          val touched0 = graft.api.Collection
-            .boundedKeyLits(batchDocs, graft.api.Collection.MaxKeyPushdown)
+          val touched0 = boundedKeyLits(batchDocs, MaxKeyPushdown)
             .fold(state.join(batchDocs, Seq("doc_id"), "left_semi"))(
               vs => state.filter(col("doc_id").isin(vs: _*)))
-          val rootRows = touched0.select(col("cluster")).distinct()
-            .head(maxDriverRoots + 1) // bounded: <= |batch docs| by contract
-          requireRootsBound(rootRows.length)
-          val roots = rootRows.map(_.getLong(0)).toSeq
+          val roots = boundedRows(touched0.select(col("cluster")).distinct(),
+            maxDriverRoots).getOrElse(throw rootsOverBound)
+            .map(_.getLong(0)).toSeq
           if (roots.isEmpty) state.limit(0)
           else state.filter(col("cluster").isin(roots: _*))
         }
@@ -584,19 +576,19 @@ object ClusterOps {
     // compacted snapshot ("fold in windows") — delegate to
     // [[componentsRebuild]], which computes the SAME state (membership
     // is a pure function of the pair log) with no driver-resident root
-    // set at all. A BOUNDED pre-check (head(n+1) on the log's distinct
-    // doc ids — touched roots <= batch docs, so over-bound docs is the
-    // sound trigger) routes corpus-scale logs straight to the rebuild
-    // WITHOUT first paying the fold's corpus-sized probe work; the
-    // catch below stays as the exact backstop for logs whose doc count
-    // passes the pre-check but whose touched-root set still trips the
-    // bound (it throws before any state mutation, so the delegation
-    // starts clean either way).
+    // set at all. A BOUNDED count of the log's distinct doc ids (touched
+    // roots <= batch docs, so over-bound docs is the sound trigger; one
+    // number reaches the driver) routes corpus-scale logs straight to
+    // the rebuild WITHOUT first paying the fold's corpus-sized probe
+    // work; the catch below stays as the exact backstop for logs whose
+    // doc count passes the pre-check but whose touched-root set still
+    // trips the bound (it throws before any state mutation, so the
+    // delegation starts clean either way).
     def foldFullOrRebuild(): Unit = {
       val full = pairs.scanVersion(head)
       val manyDocs = full.select(col(aCol).as("d"))
         .unionByName(full.select(col(bCol).as("d"))).distinct()
-        .head(maxDriverRoots + 1).length > maxDriverRoots
+        .limit(maxDriverRoots + 1).count() > maxDriverRoots
       if (manyDocs) {
         componentsRebuild(spark, pairsPath, statePath, aCol, bCol, keepPath)
         ()
@@ -970,25 +962,26 @@ object ClusterOps {
     val state = graft.api.Collection(spark, statePath)
     val head = state.version
     def applyTouched(touched: DataFrame): Unit = {
+      // checkpointed lazily (see Collection.boundedRows): both halves
+      // read it, so an over-bound window runs the touched scan once
       val resolved = touched
         .groupBy(col("doc_id")).agg(min(col("cluster")).as("cluster"))
+        .localCheckpoint(eager = false)
       // One of two halves resolves each touched doc's keeper into
       // `changes` (doc_id, cluster, keep_id — NULL when the cluster has
       // no keep row); the one tail below gates and commits it.
       //
       // BOUNDED DRIVER-SIDE WINDOW (the componentsUpdate fast-path
       // discipline): a steady window touches a few hundred docs, so ONE
-      // bounded head + ONE point read of the cluster-keyed keep-list
+      // bounded fetch + ONE point read of the cluster-keyed keep-list
       // replace the checkpoint/fetch/empty-probe action chain (~5 fixed
       // job costs per window), and `changes` is a local relation whose
       // emptiness checks start no job. The full-snapshot paths (first-
       // cycle bootstrap, post-compaction/post-sweep re-derive) are
       // corpus-proportional and take the distributed half.
-      val maxT = graft.api.Collection.MaxKeyPushdown
-      val headRows = resolved.head(maxT + 1)
-      val changes =
-        if (headRows.length <= maxT) {
-          val m = headRows.map(r => (r.getLong(0), r.getLong(1)))
+      val changes = boundedRows(resolved, MaxKeyPushdown) match {
+        case Some(rows) =>
+          val m = rows.map(r => (r.getLong(0), r.getLong(1)))
           val clusters = m.map(_._2).distinct.toSeq
           val keepMap =
             if (clusters.isEmpty) Map.empty[Long, Long]
@@ -999,8 +992,7 @@ object ClusterOps {
           import spark.implicits._
           m.toSeq.map { case (d, c) => (d, c, keepMap.get(c)) }
             .toDF("doc_id", "cluster", "keep_id")
-        } else {
-          val m = resolved.localCheckpoint()
+        case None =>
           // keeper lookup restricted to the window's TOUCHED clusters: a
           // bounded set rides the cluster-KEYED keep collection's scan as
           // an IN predicate (the filter references only the LWW
@@ -1012,21 +1004,20 @@ object ClusterOps {
           // still auto-broadcasts genuinely small over-bound sets from
           // runtime stats). Never an unrestricted keep-list scan per
           // window.
-          val touchedClusters = m.select(col("cluster")).distinct()
+          val touchedClusters = resolved.select(col("cluster")).distinct()
           val keepAll = keepListMaterialized(spark, keepPath)
-          val keep = graft.api.Collection
-            .boundedKeyLits(touchedClusters, maxT)
+          val keep = boundedKeyLits(touchedClusters, MaxKeyPushdown)
             .fold(keepAll.join(touchedClusters, Seq("cluster"),
               "left_semi"))(vs =>
               if (vs.isEmpty) keepAll.limit(0)
               else keepAll.filter(col("cluster").isin(vs: _*)))
           // LEFT join, not an inner join: the gate below must see the
           // touched clusters that have no keep row
-          m.join(keep.select(col("cluster"), col("keep_id")),
+          resolved.join(keep.select(col("cluster"), col("keep_id")),
               Seq("cluster"), "left")
             .select(col("doc_id"), col("cluster"), col("keep_id"))
             .localCheckpoint()
-        }
+      }
       // LOUD out-of-step gate: a touched cluster with no keep row means
       // the keep-list is OUT OF STEP with the state (the signature of a
       // sweep that crashed between its state and keep rewrites).

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.Collection.{boundedKeyLits, boundedRows}
 
 /** Deduplication operators for training-data pipelines, engineered for the
   * 100 TB shape: candidate generation is always a key-equality shuffle join
@@ -670,11 +671,13 @@ object DedupOps {
       // banding pipeline per reference (r18's Profile measured the
       // checkpoints this replaces at ~28 tiny AQE stage jobs per probe —
       // the composed loops' per-window latency floor). Over bound,
-      // everything falls back to the r18 checkpoint/broadcast shape —
-      // nothing driver-resident beyond the bounded head, same results.
-      val fetched = restricted.head(maxIdPushdown + 1)
+      // everything falls back to the r18 checkpoint/broadcast shape over
+      // the same (lazy, see Collection.boundedRows) checkpoint the fetch
+      // filled — the banding pipeline runs once either way, same results.
+      val restrictedCk = restricted.localCheckpoint(eager = false)
       val (cands, candLits, bounded) =
-        if (fetched.length <= maxIdPushdown) {
+        boundedRows(restrictedCk, maxIdPushdown) match {
+        case Some(fetched) =>
           val ia = restricted.schema.fieldIndex("doc_a")
           val ib = restricted.schema.fieldIndex("doc_b")
           val ifa = restricted.schema.fieldIndex("__new_a")
@@ -716,36 +719,34 @@ object DedupOps {
             .flatMap(r => Iterator(r.get(ia), r.get(ib))).toSeq.distinct
           (localDf, if (ids.size <= maxIdPushdown) Some(ids) else None,
             true)
-        } else {
+        case None =>
           // over-bound fallback: the r18 shape. Delete-awareness first —
           // the candidates' old-side ids broadcast into a map-only scan
           // of `live`; the surviving set broadcasts back into the pair
-          // filter; both small frames checkpointed once (left lazy, the
-          // banding pipeline re-executes per reference — measured 9x).
-          val checked = live.fold(restrictedPairs) { lv =>
-            val cs = restrictedPairs.localCheckpoint()
-            val oldIds = cs.select(col("doc_a").as("doc_id"))
-              .unionByName(cs.select(col("doc_b").as("doc_id")))
+          // filter, checkpointed once (left lazy, the pipeline re-executes
+          // per reference — measured 9x). The bounded id set pushes into
+          // the keyed sets scan as an IN predicate (key bloom / key-offset
+          // pruned) when it fits, else the map-only broadcast-join scan.
+          val pairs = restrictedCk.select(col("doc_a"), col("doc_b"))
+          val cs = live.fold(pairs) { lv =>
+            val oldIds = pairs.select(col("doc_a").as("doc_id"))
+              .unionByName(pairs.select(col("doc_b").as("doc_id")))
               .distinct()
               .join(broadcast(newIds), Seq("doc_id"), "left_anti")
             val liveOld = lv.select(col(lv.columns.head).as("doc_id"))
               .join(broadcast(oldIds), Seq("doc_id"), "left_semi")
             val ok = newIds.unionByName(liveOld).localCheckpoint()
-            cs
+            pairs
               .join(broadcast(ok.withColumnRenamed("doc_id", "doc_a")),
                 Seq("doc_a"), "left_semi")
               .join(broadcast(ok.withColumnRenamed("doc_id", "doc_b")),
                 Seq("doc_b"), "left_semi")
+              .localCheckpoint()
           }
-          // checkpoint once; the bounded id set pushes into the keyed
-          // sets scan as an IN predicate (key bloom / key-offset pruned)
-          // when it fits, else the map-only broadcast-join scan
-          val cs = checked.localCheckpoint()
           val candIds = cs.select(col("doc_a").as("doc_id"))
             .unionByName(cs.select(col("doc_b").as("doc_id"))).distinct()
-          (cs, graft.api.Collection.boundedKeyLits(candIds, maxIdPushdown),
-            false)
-        }
+          (cs, boundedKeyLits(candIds, maxIdPushdown), false)
+      }
       val src = candLits.fold(allSets)(vs =>
         allSets.filter(col("doc_id").isin(vs: _*)))
       if (!extendIndex) verified(cands, src)
@@ -913,26 +914,19 @@ object DedupOps {
       // full-outer join on doc_id — a side's null means the id is absent
       // from that table (a plain insert there), so the per-table healing
       // semantics are exactly the two separate fetches' — and the driver
-      // pays one job instead of two.
-      // BOUNDED fetch, not collect(): head(n+1) caps the driver
-      // materialization at the guard's own threshold — a corpus-sized
-      // "batch" (a whole-log backfill fed as one window) fails the
-      // require below LOUDLY instead of OOMing the driver inside a
-      // collect() the guard could never reach. Within bound, head()
-      // returns the complete split (there are at most n rows). The
-      // |batch| bound is a CONTRACT, not an accident: backfills must
-      // ingest in windows.
-      val stBoth = setsState.withColumnRenamed("same", "s_same")
-        .join(bandsState.withColumnRenamed("same", "b_same"),
-          Seq("doc_id"), "full_outer")
-        .head(maxStateSplit + 1)
-      require(stBoth.length <= maxStateSplit,
-        s"hadro: index extension for $indexPath found ${stBoth.length} " +
-          s"batch ids already present — above maxStateSplit " +
-          s"($maxStateSplit). The changed/unchanged split is driver-" +
-          "resident by design (bounded by |batch|); ingest a backfill " +
-          "of this size in windows instead of one batch, or raise " +
-          "maxStateSplit if the driver is sized for it")
+      // pays one job instead of two. A corpus-sized "batch" (a whole-log
+      // backfill fed as one window) fails LOUDLY: the |batch| bound is a
+      // CONTRACT, not an accident — backfills must ingest in windows.
+      val stBoth = boundedRows(setsState.withColumnRenamed("same", "s_same")
+          .join(bandsState.withColumnRenamed("same", "b_same"),
+            Seq("doc_id"), "full_outer"), maxStateSplit)
+        .getOrElse(throw new IllegalArgumentException(
+          s"hadro: index extension for $indexPath found more than " +
+            s"maxStateSplit ($maxStateSplit) batch ids already present. " +
+            "The changed/unchanged split is driver-resident by design " +
+            "(bounded by |batch|); ingest a backfill of this size in " +
+            "windows instead of one batch, or raise maxStateSplit if the " +
+            "driver is sized for it"))
       extendTable(setsColl, newSets,
         stBoth.filter(!_.isNullAt(1)).map(r => (r.get(0), r.getBoolean(1))))
       extendTable(bandsColl, newBands,

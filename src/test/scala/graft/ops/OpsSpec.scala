@@ -1800,9 +1800,17 @@ class OpsSpec extends SparkSuite {
     val viaIn = DedupOps.minhashLshIndexProbe(spark, batch,
       "doc_id", "text", build())
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted.toSeq
+    // the fallback reads the checkpoint the bounded fetch filled: a
+    // pinned pair is evaluated once, not once per fetch and again per
+    // fallback checkpoint
+    val pinEvals = spark.sparkContext.longAccumulator("pinEvals")
+    val pins = Seq((1L, 101L), (2L, 101L)).toDS()
+      .map { p => pinEvals.add(1); p }.toDF("doc_a", "doc_b")
     val viaScan = DedupOps.minhashLshIndexProbe(spark, batch,
-      "doc_id", "text", build(), maxIdPushdown = 0)
+      "doc_id", "text", build(), maxIdPushdown = 0, mustCheck = Some(pins))
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted.toSeq
+    assert(pinEvals.value == 2L,
+      s"over-bound probe evaluated its 2 pinned pairs ${pinEvals.value} times")
     val lazyDry = DedupOps.minhashLshIndexProbe(spark, batch,
       "doc_id", "text", build(), extendIndex = false)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted.toSeq
@@ -1833,9 +1841,15 @@ class OpsSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("dfold").toString
     val st1 = s"$dir/s1"; val kp1 = s"$dir/k1"; val dp1 = s"$dir/d1"
     val st2 = s"$dir/s2"; val kp2 = s"$dir/k2"; val dp2 = s"$dir/d2"
+    // the distributed fold reads the pair checkpoint the bounded fetch
+    // filled: the caller's pipeline runs once, not twice
+    val pairEvals = spark.sparkContext.longAccumulator("pairEvals")
     ClusterOps.componentsUpdate(spark,
-      (0L until 1200L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
+      (0L until 1200L).map(i => (i, i + 1)).toDS()
+        .map { p => pairEvals.add(1); p }.toDF("a", "b"), "a", "b",
       st1, keepPath = Some(kp1))
+    assert(pairEvals.value == 1200L,
+      s"over-bound window evaluated its 1200 pairs ${pairEvals.value} times")
     ClusterOps.curationCycle(spark, st1, "cur", kp1, dp1)
     ClusterOps.componentsUpdate(spark,
       (0L until 600L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
@@ -1870,6 +1884,40 @@ class OpsSpec extends SparkSuite {
       assert(stored(a).isDefined && stored(a) == stored(b),
         s"stored schemas diverged: ${stored(a)} vs ${stored(b)}")
     }
+  }
+
+  test("a regular-sized loop window keeps its Spark job budget: the " +
+      "probe, componentsUpdate and curationCycle driver paths") {
+    val dir = java.nio.file.Files.createTempDirectory("jobbudget").toString
+    val idx = s"$dir/i"; val st = s"$dir/s"; val kp = s"$dir/k"
+    val dp = s"$dir/d"
+    def text(i: Int) = (0 until 31).map(j => s"w${i}_$j").mkString(" ")
+    DedupOps.minhashLshIndexBuild(
+      (0 until 40).map(i => (i.toLong, text(i))).toDF("doc_id", "text"),
+      "doc_id", "text", idx)
+    ClusterOps.componentsUpdate(spark,
+      (0L until 20L).map(i => (i, i + 20L)).toDF("a", "b"), "a", "b", st,
+      keepPath = Some(kp))
+    ClusterOps.curationCycle(spark, st, "cur", kp, dp)
+    // one window: ten near-dups of indexed docs, ten fresh docs
+    val batch = ((0 until 10).map(i => (100L + i, text(i) + " x")) ++
+      (50 until 60).map(i => (100L + i, text(i)))).toDF("doc_id", "text")
+    val (pairs, probeJobs) = countJobs(DedupOps.minhashLshIndexProbe(spark,
+      batch, "doc_id", "text", idx)
+      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted.toSeq)
+    assert(pairs == (0L until 10L).map(i => (i, 100L + i)), pairs.toString)
+    val (_, foldJobs) = countJobs(ClusterOps.componentsUpdate(spark,
+      pairs.toDF("a", "b"), "a", "b", st, keepPath = Some(kp)))
+    val (_, cycleJobs) = countJobs(
+      ClusterOps.curationCycle(spark, st, "cur", kp, dp))
+    assert(ClusterOps.dropList(spark, dp).count() == 30L)
+    info(s"jobs: probe $probeJobs, componentsUpdate $foldJobs, " +
+      s"curationCycle $cycleJobs")
+    // the counts the per-site head(n+1) guards ran (23, 8, 5); a lazy
+    // checkpoint that added a job on the driver path would show here
+    assert(probeJobs <= 23 && foldJobs <= 8 && cycleJobs <= 5,
+      s"probe $probeJobs, componentsUpdate $foldJobs, " +
+        s"curationCycle $cycleJobs jobs")
   }
 
   test("LSH index probe never emits an old-old pair, even when mustCheck " +
