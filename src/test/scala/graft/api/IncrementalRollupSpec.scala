@@ -396,6 +396,34 @@ class IncrementalRollupSpec extends SparkSuite {
         s"(${shuffled.sorted.reverse})")
   }
 
+  test("a regular-sized keyed refresh keeps its Spark job budget: " +
+      "resolvedAsOf(version, touched) and refreshedFrame") {
+    val w = Files.createTempDirectory("irjb").resolve("c").toString
+    Collection.create(spark, w,
+      (0L until 400L).map(i => (i, f"s${i % 4}%02d", i.toDouble))
+        .toDF("k", "g", "v").repartitionByRange(4, col("g")),
+      key = Some("k"))
+    val c = Collection(spark, w)
+    val v1 = c.version
+    // one window: key 16 gets a new extreme, key 1 moves s01 -> s00
+    c.set(Seq((16L, "s00", 8000.0), (1L, "s00", 1.0)).toDF("k", "g", "v"))
+    val v2 = c.version
+    // the touched keys as callers pass them: a changes-window scan
+    val window = ChangeFeed.updateImages(spark, w, v1, v2).select($"k")
+    val (resolved, resolveJobs) = countJobs(c.resolvedAsOf(v2, window)
+      .select($"k", $"g").as[(Long, String)].collect().sorted.toSeq)
+    assert(resolved == Seq((1L, "s00"), (16L, "s00")), resolved.toString)
+    val (groups, refreshJobs) = countJobs(IncrementalRollup.refreshedFrame(
+      spark, w, v1, v2, "g", Seq(("max", "v", "max_v")))
+      .select($"g").as[String].collect().sorted.toSeq)
+    assert(groups == Seq("s00", "s01"), groups.toString)
+    info(s"jobs: resolvedAsOf $resolveJobs, refreshedFrame $refreshJobs")
+    // the counts the eager touched-key checkpoints ran (8, 16); the lazy
+    // checkpoint runs 7 and 13. One that added a job would show here
+    assert(resolveJobs <= 8 && refreshJobs <= 16,
+      s"resolvedAsOf $resolveJobs, refreshedFrame $refreshJobs jobs")
+  }
+
   test("rollup_health counts ONLY genuine protocol breaks: a planted " +
       "off-thread commit with a committing MERGE trips the counter; the " +
       "benign no-op-MERGE-vs-concurrent-commit race does not") {

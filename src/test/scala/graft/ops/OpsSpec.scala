@@ -1802,9 +1802,11 @@ class OpsSpec extends SparkSuite {
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().sorted.toSeq
     // the fallback reads the checkpoint the bounded fetch filled: a
     // pinned pair is evaluated once, not once per fetch and again per
-    // fallback checkpoint
+    // fallback checkpoint. Neither pin is in the result (doc 3 is below
+    // the threshold, (1,3) is old-old), so viaScan == viaIn still shows
+    // the fallback's own candidate search finding (1,101) and (2,101)
     val pinEvals = spark.sparkContext.longAccumulator("pinEvals")
-    val pins = Seq((1L, 101L), (2L, 101L)).toDS()
+    val pins = Seq((3L, 101L), (1L, 3L)).toDS()
       .map { p => pinEvals.add(1); p }.toDF("doc_a", "doc_b")
     val viaScan = DedupOps.minhashLshIndexProbe(spark, batch,
       "doc_id", "text", build(), maxIdPushdown = 0, mustCheck = Some(pins))
